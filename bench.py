@@ -466,7 +466,10 @@ def main() -> None:
     # number — at 100 TB codegen amortizes to zero. Data caches are
     # cleared between reps so only code-warmth carries (each rep
     # re-materializes its own persisted frames); the codegen cache
-    # staying warm is the point of the protocol.
+    # staying warm across one query's reps is the point of the
+    # protocol. It also survives a pass over the whole basket only
+    # because session.get_spark sizes it to 1,000 classes; Spark's
+    # default of 100 is below a pass's working set.
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
     max_reps = int(os.environ.get("SPARK_GRAFT_BENCH_MAX_REPS", "7"))
     timings: dict[str, float] = {}

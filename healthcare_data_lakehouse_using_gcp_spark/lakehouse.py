@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import DEFAULT_CONFIG, EngineConfig
-from .operators.etl import build_etl_cached
+from .operators.etl import build_etl_cached, route_counts
 from .plans import reports
 from .plans.models import ModelRunner, healthcare_models
 from .sources.readers import read_json_batch
@@ -159,8 +159,12 @@ class HealthcareLakehouse:
         # cache=True: the four routes + counts share one parse/enrich
         # pass instead of recomputing the batch lineage per branch
         routed, enriched = build_etl_cached(raw_df, self.cfg, cache=True)
-        counts: dict[str, int] = {}
         try:
+            # THIS batch's routed rows, not the re-read table: the
+            # reference's Count.Globally metric is run-scoped
+            # (healthcare_etl_pipeline.py:351-355). One aggregate job
+            # also fills the cache the route writes then read.
+            counts = route_counts(enriched)
             for name, date_col in ENTITY_DATE_COL.items():
                 df = routed[name].withColumn(
                     "event_date", F.to_date(F.col(date_col))
@@ -196,18 +200,10 @@ class HealthcareLakehouse:
                     df.hint("rebalance", "event_date").write.mode(
                         "append"
                     ).partitionBy("event_date").parquet(zone)
-                # Count THIS batch's routed rows (from the cached
-                # enriched frame), not the re-read table: the
-                # reference's Count.Globally metric is run-scoped
-                # (healthcare_etl_pipeline.py:351-355) — on a second
-                # run it reports that run's records, not the table
-                # total.
-                counts[name] = df.count()
-            unknown = routed["unknown"].drop("_corrupt_record")
-            n_unknown = unknown.count()
-            if n_unknown > 0:
-                unknown.write.mode("append").json(self.zone_path("errors"))
-            counts["unknown"] = n_unknown
+            if counts["unknown"] > 0:
+                routed["unknown"].drop("_corrupt_record").write.mode(
+                    "append"
+                ).json(self.zone_path("errors"))
         finally:
             enriched.unpersist()
         return counts

@@ -130,16 +130,6 @@ def shingles(text_col: str, n: int = 3):
     return F.array_distinct(shingles_raw(text_col, n))
 
 
-def shingle_frame(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", shingle_size: int = 3
-) -> DataFrame:
-    """(id, sh: array<string>) with full-cluster parallelism; persist
-    before reuse across pipeline stages."""
-    return ensure_parallelism(df.select(F.col(id_col), F.col(text_col))).select(
-        F.col(id_col), shingles(text_col, shingle_size).alias("sh")
-    )
-
-
 def shingle_hash_frame(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", shingle_size: int = 3
 ) -> DataFrame:
@@ -237,56 +227,6 @@ def _bucket_pairs(banded: DataFrame, id_col: str) -> DataFrame:
         .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
         .distinct()
     )
-
-
-def minhash_lsh_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 24,
-    bands: int = 6,
-    shingle_size: int = 3,
-    hash_df: DataFrame | None = None,
-) -> DataFrame:
-    """Candidate near-duplicate pairs via banded LSH.
-
-    shingle-hash → minhash(num_hashes) → ``bands`` bands → hash each
-    band → equi-join on (band_id, band_hash). Output: (id_a, id_b)
-    with id_a < id_b, distinct. Shuffle linear in corpus size.
-    """
-    hf = (
-        hash_df
-        if hash_df is not None
-        else shingle_hash_frame(df, text_col, id_col, shingle_size)
-    )
-    sig = minhash_signatures(hf, id_col, num_hashes)
-    return _bucket_pairs(banded_buckets(sig, id_col, num_hashes, bands), id_col)
-
-
-def jaccard_pairs(
-    df: DataFrame,
-    pairs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_size: int = 3,
-    sh_df: DataFrame | None = None,
-) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs (verification
-    stage after LSH)."""
-    # persist: joined twice (id_a and id_b sides)
-    sh = (
-        sh_df if sh_df is not None else shingle_frame(df, text_col, id_col, shingle_size)
-    ).persist()
-    out = (
-        pairs.join(sh.withColumnsRenamed({id_col: "id_a", "sh": "sh_a"}), "id_a")
-        .join(sh.withColumnsRenamed({id_col: "id_b", "sh": "sh_b"}), "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-    )
-    return out.select("id_a", "id_b", "jaccard")
 
 
 def shingle_set_frame(

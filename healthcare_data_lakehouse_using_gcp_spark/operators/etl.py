@@ -31,7 +31,13 @@ from ..config import DEFAULT_CONFIG, EngineConfig
 from ..functions import scalars as S
 from ..schemas import envelope_schema
 
-KNOWN_TYPES = ("patient_vitals", "insurance_claim", "ehr_record")
+# demux route of each known data_type; any other type routes to
+# "unknown". demux and route_counts both read this one mapping.
+ROUTE_OF_TYPE = {
+    "patient_vitals": "vitals",
+    "insurance_claim": "claims",
+    "ehr_record": "ehr",
+}
 
 REQUIRED_FIELDS = {
     # healthcare_etl_pipeline.py:77-82, 91-96, 102-107
@@ -205,34 +211,46 @@ def demux(enriched: DataFrame) -> dict[str, DataFrame]:
     ``.cache()`` upstream (or write partitionBy("data_type")) so the
     scan+parse isn't re-executed per branch.
     """
-    vitals_cols = [
-        "patient_id", "timestamp", "heart_rate", "blood_pressure_systolic",
-        "blood_pressure_diastolic", "temperature", "oxygen_saturation",
-        "respiratory_rate", "device_id", "location", "processed_at",
-        "pipeline_version", "data_quality_score", "heart_rate_category",
-        "hour_of_day", "day_of_week",
-    ]
-    claims_cols = [
-        "claim_id", "patient_id", "provider_id", "service_date",
-        "diagnosis_codes", "procedure_codes", "total_amount", "insurance_type",
-        "claim_status", "submission_date", "processed_at", "pipeline_version",
-        "data_quality_score", "processing_days", "amount_category",
-    ]
-    ehr_cols = [
-        "record_id", "patient_id", "visit_date", "provider_id", "diagnosis",
-        "treatment", "medications", "lab_results", "notes", "processed_at",
-        "pipeline_version", "data_quality_score", "medication_count",
-        "lab_test_count",
-    ]
-    return {
-        "vitals": enriched.filter(F.col("data_type") == "patient_vitals").select(vitals_cols),
-        "claims": enriched.filter(F.col("data_type") == "insurance_claim").select(claims_cols),
-        "ehr": enriched.filter(F.col("data_type") == "ehr_record").select(ehr_cols),
-        # well-formed rows with unrecognized data_type (:222-223)
-        "unknown": enriched.filter(
-            F.col("_corrupt_record").isNull() & ~F.col("data_type").isin(*KNOWN_TYPES)
-        ),
+    route_cols = {
+        "vitals": [
+            "patient_id", "timestamp", "heart_rate", "blood_pressure_systolic",
+            "blood_pressure_diastolic", "temperature", "oxygen_saturation",
+            "respiratory_rate", "device_id", "location", "processed_at",
+            "pipeline_version", "data_quality_score", "heart_rate_category",
+            "hour_of_day", "day_of_week",
+        ],
+        "claims": [
+            "claim_id", "patient_id", "provider_id", "service_date",
+            "diagnosis_codes", "procedure_codes", "total_amount", "insurance_type",
+            "claim_status", "submission_date", "processed_at", "pipeline_version",
+            "data_quality_score", "processing_days", "amount_category",
+        ],
+        "ehr": [
+            "record_id", "patient_id", "visit_date", "provider_id", "diagnosis",
+            "treatment", "medications", "lab_results", "notes", "processed_at",
+            "pipeline_version", "data_quality_score", "medication_count",
+            "lab_test_count",
+        ],
     }
+    routes = {
+        route: enriched.filter(F.col("data_type") == dtype).select(route_cols[route])
+        for dtype, route in ROUTE_OF_TYPE.items()
+    }
+    # well-formed rows with unrecognized data_type (:222-223)
+    routes["unknown"] = enriched.filter(
+        F.col("_corrupt_record").isNull() & ~F.col("data_type").isin(*ROUTE_OF_TYPE)
+    )
+    return routes
+
+
+def route_counts(enriched: DataFrame) -> dict[str, int]:
+    """Row count of every demux route, from ONE aggregate over the
+    (quality-filtered) enriched frame instead of a count job per
+    route: a data_type outside ROUTE_OF_TYPE counts as unknown."""
+    counts = dict.fromkeys((*ROUTE_OF_TYPE.values(), "unknown"), 0)
+    for row in enriched.groupBy("data_type").count().collect():
+        counts[ROUTE_OF_TYPE.get(row["data_type"], "unknown")] += row["count"]
+    return counts
 
 
 def build_etl(

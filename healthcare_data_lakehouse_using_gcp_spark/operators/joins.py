@@ -458,11 +458,13 @@ def asof_select_min_by(
     (components alias: dist+1 with tie-1 packs to the same bigint) —
     but the bound is now one bitwise AND against the component's
     out-of-range mask (``c & ~(2^bits-1)`` is nonzero exactly when
-    c < 0 or c >= 2^bits), OR-accumulated into one violation column
-    whose group-level max() rides the same HashAggregate. The raise
-    moves to ONE conditional per GROUP in the output projection;
-    NULL components surface as a NULL violation word, coalesced to
-    -1 so they raise too instead of being min_by-skipped.
+    c < 0 or c >= 2^bits), OR-accumulated into one violation word per
+    row. The row-level flag ``word != 0`` (NULL components make a
+    NULL word, coalesced to true so they raise instead of being
+    min_by-skipped) is OR-aggregated per group on the same
+    HashAggregate; a max() over the raw word would let one clean
+    row's 0 hide a negative word in its group. The raise is ONE
+    conditional per GROUP in the output projection.
     """
     dist = F.abs(F.datediff(F.to_date(F.col(left_date)), F.to_date(F.col(right_date))))
     if tie_bits is not None:
@@ -484,13 +486,13 @@ def asof_select_min_by(
         keyed = df.select(
             *df.columns,
             packed.alias("__pk"),
-            F.coalesce(viol, F.lit(-1)).alias("__pk_viol"),
+            F.coalesce(viol != 0, F.lit(True)).alias("__pk_viol"),
         )
         agg = keyed.groupBy(*partition_cols).agg(
             *[F.min_by(F.col(c), F.col("__pk")).alias(c) for c in value_cols],
-            F.max("__pk_viol").alias("__pk_viol"),
+            F.bool_or("__pk_viol").alias("__pk_viol"),
         )
-        guard = F.when(F.col("__pk_viol") == 0, F.lit(True)).otherwise(
+        guard = F.when(~F.col("__pk_viol"), F.lit(True)).otherwise(
             F.raise_error(
                 F.lit(
                     "asof_select_min_by: a (dist, tie_breakers) row is "

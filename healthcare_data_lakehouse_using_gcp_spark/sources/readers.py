@@ -67,11 +67,6 @@ def load_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return out
 
 
-def register_testdata(spark: SparkSession, sf_dir: str) -> None:
-    for name, df in load_testdata(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 def read_json_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int = 10
 ) -> DataFrame:
@@ -122,17 +117,3 @@ def write_zone_table(
         writer = df.write.mode(mode)
     writer.parquet(os.path.join(warehouse, zone, table))
 
-
-def write_error_sink(df: DataFrame, warehouse: str) -> None:
-    """S4: unknown-type records as JSON files under errors/
-    (healthcare_etl_pipeline.py:342-348)."""
-    df.write.mode("append").json(os.path.join(warehouse, "errors"))
-
-
-def read_zone_table(spark: SparkSession, warehouse: str, zone: str, table: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(warehouse, zone, table))
-
-
-def with_event_date(df: DataFrame, ts_col: str, out_col: str = "event_date") -> DataFrame:
-    """Partition column for date-partitioned zone writes."""
-    return df.withColumn(out_col, F.to_date(F.col(ts_col)))

@@ -469,17 +469,6 @@ def stream_stream_band_join(
     return l.join(r, cond, how)
 
 
-def run_batch_equivalent(
-    spark: SparkSession, input_path: str, cfg: EngineConfig = DEFAULT_CONFIG
-) -> dict[str, DataFrame]:
-    """The --streaming flag off (healthcare_etl_pipeline.py:248-249):
-    identical transform over a bounded read. Used to assert
-    batch/stream parity (T4)."""
-    from ..sources.readers import read_json_batch
-
-    return build_etl(read_json_batch(spark, input_path), cfg)
-
-
 def session_window_counts(
     events: DataFrame,
     key_col: str = "user_id",

@@ -75,10 +75,11 @@ def test_asof_min_by_matches_rank1(spark):
 
 def test_asof_min_by_packed_equals_struct_and_fails_loud(spark):
     """Optimization r17: the packed min_by guard moved from a per-row
-    when/raise chain to a per-component violation mask max-aggregated
+    when/raise chain to a per-component violation flag OR-aggregated
     per group. Pin (a) packed ≡ struct on in-range data, (b) the plan
     stays a sort-free HashAggregate, (c) out-of-range and NULL tie
-    values still raise on evaluation instead of silently mis-ranking."""
+    values still raise on evaluation instead of silently mis-ranking,
+    also next to clean rows of the same group."""
     df = spark.createDataFrame(
         [
             ("P1", "2024-06-10", "2024-06-08", 3, 108),
@@ -122,6 +123,18 @@ def test_asof_min_by_packed_equals_struct_and_fails_loud(spark):
     )
     with pytest.raises((Py4JJavaError, PythonException, Exception)):
         joins.asof_select_min_by(nulled, tie_bits=(3,), **kwargs).collect()
+
+    # a clean row of the SAME group must not hide a negative tie (it
+    # would pack below the clean rows and win) or a NULL one (min_by
+    # would skip it): the group guard is an OR over its rows
+    for bad_tie in (-1, None):
+        mixed = df.union(
+            spark.createDataFrame(
+                [("P1", "2024-06-10", "2024-06-08", bad_tie, 666)], df.schema
+            )
+        )
+        with pytest.raises(Exception, match="outside the packable range"):
+            joins.asof_select_min_by(mixed, tie_bits=(3,), **kwargs).collect()
 
 
 def test_salted_join_equals_plain_join(spark):
