@@ -46,14 +46,6 @@ def main(argv: list[str] | None = None) -> int:
                 "the same batch with the same token converges instead of "
                 "duplicating (e.g. --txn-id load-2024-06-01)",
             )
-            s.add_argument(
-                "--plain-append", action="store_true",
-                help="write entity zones as plain date-partitioned parquet "
-                "appends (reference-parity layout) instead of the default "
-                "SnapshotTable manifests (atomic commits, time travel, "
-                "manifest file pruning; r10 default per ROADMAP item 3). "
-                "Incompatible with --txn-id",
-            )
         if name == "demo-stream":
             s.add_argument("--seconds", type=int, default=30)
             s.add_argument("--rate", type=int, default=1, help="publisher ticks/second")
@@ -63,12 +55,8 @@ def main(argv: list[str] | None = None) -> int:
             s.add_argument("--seconds", type=int, default=30)
             s.add_argument(
                 "--upsert", action="store_true",
-                help="idempotent merge sink (replayed micro-batches converge)",
-            )
-            s.add_argument(
-                "--snapshot", action="store_true",
-                help="exactly-once keyless zone sink (SnapshotTable commits "
-                "keyed on micro-batch id; kill-and-replay converges)",
+                help="keyed merge sink (latest processed_at per natural key "
+                "wins; replayed micro-batches converge)",
             )
         if name in ("models", "all"):
             s.add_argument(
@@ -78,11 +66,6 @@ def main(argv: list[str] | None = None) -> int:
         s.add_argument("--as-of", default=None, help="freeze 'now' (ISO) for deterministic runs")
 
     args = p.parse_args(argv)
-
-    # the help text documents the incompatibility — surface it as a
-    # clean exit-code-2 usage error, not run_etl's ValueError traceback
-    if getattr(args, "txn_id", None) and getattr(args, "plain_append", False):
-        p.error("--txn-id requires snapshot mode; drop --plain-append")
 
     if args.cmd == "generate":
         from .sources.generator import HealthcareDataGenerator
@@ -108,17 +91,7 @@ def main(argv: list[str] | None = None) -> int:
     lh = HealthcareLakehouse(spark, args.warehouse, cfg)
 
     if args.cmd == "etl":
-        print(
-            json.dumps(
-                {
-                    "etl_counts": lh.run_etl(
-                        args.raw,
-                        txn_id=args.txn_id,
-                        snapshot=not args.plain_append,
-                    )
-                }
-            )
-        )
+        print(json.dumps({"etl_counts": lh.run_etl(args.raw, txn_id=args.txn_id)}))
     elif args.cmd == "models":
         out = lh.run_models()
         print(json.dumps({name: df.count() for name, df in out.items()}))
@@ -126,17 +99,14 @@ def main(argv: list[str] | None = None) -> int:
         out = lh.run_reports()
         print(json.dumps({k: str(v) for k, v in out.items()}))
     elif args.cmd == "all":
-        out = lh.run_all(
-            args.raw, txn_id=args.txn_id, snapshot=not args.plain_append
-        )
+        out = lh.run_all(args.raw, txn_id=args.txn_id)
         print(json.dumps({k: str(v) for k, v in out.items()}))
     elif args.cmd == "stream":
         from .streaming.pipeline import start_etl_stream
 
         q = start_etl_stream(
             spark, args.raw, args.warehouse, cfg, trigger_seconds=5,
-            upsert=args.upsert,
-            mode="snapshot" if args.snapshot else None,
+            mode="upsert" if args.upsert else "snapshot",
         )
         deadline = time.time() + args.seconds
         while time.time() < deadline and q.isActive:
@@ -149,8 +119,11 @@ def main(argv: list[str] | None = None) -> int:
         from .streaming.rate_source import mixed_mode_stream
 
         msgs = mixed_mode_stream(spark, rows_per_second=args.rate)
+        sink = make_etl_sink(
+            args.warehouse, cfg, mode="upsert" if args.upsert else "snapshot"
+        )
         q = (
-            msgs.writeStream.foreachBatch(make_etl_sink(args.warehouse, cfg, args.upsert))
+            msgs.writeStream.foreachBatch(sink)
             .trigger(processingTime="5 seconds")
             .option(
                 "checkpointLocation",
@@ -165,10 +138,9 @@ def main(argv: list[str] | None = None) -> int:
         q.awaitTermination(30)
         counts = {}
         for e in ("vitals", "claims", "ehr"):
-            p = os.path.join(args.warehouse, "processed", e)
             try:
-                counts[e] = spark.read.parquet(p).count()
-            except Exception:
+                counts[e] = lh.read_processed(e).count()
+            except ValueError:  # no micro-batch committed this zone
                 counts[e] = 0
         print(json.dumps({"stopped_after_s": args.seconds, "processed": counts}))
     spark.stop()

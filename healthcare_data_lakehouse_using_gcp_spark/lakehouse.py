@@ -6,17 +6,22 @@ airflow/dags/healthcare_data_pipeline_dag.py:139-149) with one
 class over a warehouse root:
 
     raw/        landed JSON messages (S1 input shape)
-    processed/  ETL output per entity, date-partitioned parquet (S3)
+    processed/  ETL output per entity, one SnapshotTable each (S3)
     errors/     unknown-type records as JSON (S4)
     curated/    fact table (S7); staging registered as views (S6)
 
 Zone semantics follow the reference's 3-bucket / 3-dataset split
-(terraform/main.tf:118-245). Writes partition by event date — the
-partitioning the reference *documents* but never implemented
-(docs/architecture/technical_architecture.md:162-164, SURVEY.md §4)
-— so every lookback scan (S5) partition-prunes instead of reading
-the full history: at 100 TB that is the difference between scanning
-30 partitions and 2555 days of them.
+(terraform/main.tf:118-245). Every processed-zone write — batch
+run_etl and the streaming sink alike — is an atomic SnapshotTable
+commit, and reads resolve the zone through its manifest, not by
+listing the directory, so a torn or orphaned write is never visible.
+Each commit records per-file [min, max] of every column, including
+the derived ``event_date`` (the partitioning the reference documents
+but never implemented, docs/architecture/technical_architecture.md:
+162-164, SURVEY.md §4). A lookback scan that passes
+``read_processed(entity, prune=("event_date", ">=", day))`` opens
+only the files whose range can match. Pruning is opt-in:
+run_models and run_reports read whole zones.
 """
 
 from __future__ import annotations
@@ -31,6 +36,7 @@ from .operators.etl import build_etl_cached, route_counts
 from .plans import reports
 from .plans.models import ModelRunner, healthcare_models
 from .sources.readers import read_json_batch
+from .sources.snapshots import SnapshotTable
 
 ENTITY_DATE_COL = {
     "vitals": "timestamp",
@@ -58,102 +64,42 @@ class HealthcareLakehouse:
     def read_processed(
         self, entity: str, prune: tuple[str, str, object] | None = None
     ) -> DataFrame:
-        """Resolve a processed-zone entity table. Zones written in
-        snapshot mode (run_etl(txn_id=...) or the streaming snapshot
-        sink) resolve through their manifest — explicit file list, so
-        torn/orphan commits are invisible — and accept a
-        ``prune=(col, op, value)`` manifest-level file-skipping
-        predicate (SnapshotTable.prune_files): a lookback scan opens
-        only the files whose footer range can match. Plain zones read
-        the directory as before (hive partition pruning applies
-        there); ``prune`` is ignored for them."""
-        path = self.zone_path("processed", entity)
-        if os.path.isdir(os.path.join(path, "_snapshots")):
-            from .sources.snapshots import SnapshotTable
-
-            return SnapshotTable(self.spark, path).read(prune=prune)
-        return self.spark.read.parquet(path)
+        """Resolve a processed-zone entity table through its snapshot
+        manifest: an explicit file list, so torn/orphan commits are
+        invisible. ``prune=(col, op, value)`` is an opt-in
+        manifest-level file-skipping predicate
+        (SnapshotTable.prune_files): a lookback scan opens only the
+        files whose footer range can match. Raises ValueError for a
+        zone that was never written."""
+        return SnapshotTable(self.spark, self.zone_path("processed", entity)).read(
+            prune=prune
+        )
 
     # --- ingestion → processed (the Beam pipeline, batch mode) -------
-
-    @staticmethod
-    def _reject_zone_mode_mix(zone: str, snapshot: bool) -> None:
-        """Refuse to write a zone in the OTHER mode than it already
-        holds data in (ADVICE r8). A snapshot commit next to plain
-        appended parquet shadows those rows (manifest reads don't
-        list them); a plain append into a snapshot zone writes files
-        no manifest references. Both silently drop committed rows
-        from reads — fail loudly instead and point at the migration.
-
-        Detection is O(top-level entries), no tree walk: a plain
-        date-partitioned zone has event_date=*/part files at the top
-        level; a snapshot zone has only _snapshots/ + data/."""
-        if not os.path.isdir(zone):
-            return
-        entries = set(os.listdir(zone))
-        has_manifest = "_snapshots" in entries
-        has_plain = any(
-            e.startswith("event_date=") or e.endswith(".parquet")
-            for e in entries
-        )
-        if snapshot and has_plain:
-            raise ValueError(
-                f"zone {zone} already holds PLAIN appended parquet; a "
-                "snapshot commit would shadow those rows. Migrate first: "
-                "read the zone, commit_append it as the snapshot's "
-                "initial version, then remove the plain files."
-            )
-        if not snapshot and has_manifest:
-            raise ValueError(
-                f"zone {zone} is snapshot-managed (_snapshots/ present); "
-                "a plain append would write files no manifest references. "
-                "Pass txn_id=... to keep committing through the manifest."
-            )
 
     def run_etl(
         self,
         raw_path: str | None = None,
         raw_df: DataFrame | None = None,
         txn_id: str | None = None,
-        snapshot: bool | None = None,
+        snapshot: bool = True,
     ) -> dict:
         """Parse/validate/filter/enrich/demux raw JSON messages and
-        append each route into the processed zone (date-partitioned).
+        commit each route into its processed-zone SnapshotTable.
 
         Counterpart of `python healthcare_etl_pipeline.py` in batch
         mode (healthcare_etl_pipeline.py:248-249). Returns per-route
         row counts (the Count.Globally metric, :351-355).
 
-        ``txn_id`` (VERDICT r7 item 6) switches the entity-zone writes
-        from plain append parquet to SnapshotTable.commit_append with
-        a per-entity idempotence token — re-running the same batch
+        Each entity commit is one atomic manifest version. ``txn_id``
+        adds a per-entity idempotence token: re-running the same batch
         (orchestrator retry, backfill replay) converges instead of
-        duplicating rows; the counts still report THIS run's routed
-        rows either way. Mixing modes on one zone is REJECTED here
-        (ADVICE r8): a snapshot commit into a zone holding plain
-        appended parquet would shadow those rows (read_processed then
-        resolves via the manifest, which doesn't list them), and a
-        plain append into a snapshot zone writes files no manifest
-        references — either way previously committed rows silently
-        vanish from reads. Migrate explicitly instead (read the plain
-        zone, commit it as the snapshot's initial version, remove the
-        plain files).
-
-        ``snapshot`` (r10, ROADMAP item 3) decouples the sink mode
-        from idempotence: True commits the entity zones through
-        SnapshotTable manifests even without a txn token (atomic,
-        time-travel, torn writes invisible; replay protection still
-        needs txn_id), False forces the reference-parity plain
-        date-partitioned append. Default None keeps the historical
-        inference: snapshot iff txn_id was given. The CLI defaults to
-        snapshot mode from r10 (opt out with --plain-append).
+        duplicating rows; without it a re-run appends a second
+        version. The counts report THIS run's routed rows either way.
         """
-        snap = (txn_id is not None) if snapshot is None else bool(snapshot)
-        if txn_id is not None and not snap:
-            raise ValueError(
-                "txn_id requires the snapshot sink: idempotence tokens "
-                "live in the manifest (pass snapshot=True or drop txn_id)"
-            )
+        # perfbench/workloads.py passes snapshot=True; no other mode exists
+        if snapshot is not True:
+            raise ValueError("processed zones are snapshot tables; snapshot must be True")
         if raw_df is None:
             raw_df = read_json_batch(self.spark, raw_path)
         # cache=True: the four routes + counts share one parse/enrich
@@ -169,37 +115,18 @@ class HealthcareLakehouse:
                 df = routed[name].withColumn(
                     "event_date", F.to_date(F.col(date_col))
                 )
-                zone = self.zone_path("processed", name)
-                self._reject_zone_mode_mix(zone, snapshot=snap)
-                if snap:
-                    from .sources.snapshots import SnapshotTable
-
-                    # rebalance BEFORE the snapshot append (optimization
-                    # r17, guide §6, VERDICT r16 item 6): _write_data
-                    # deliberately never reshuffles (it also serves the
-                    # Z-order/Hilbert layout commits, whose clustering a
-                    # rebalance would destroy), so sliver control is the
-                    # CALLER's job. A plain ETL batch has no layout to
-                    # protect — without this, every batch appends one
-                    # part file per upstream task. Clustering by
-                    # event_date also tightens the per-file min/max
-                    # stats the snapshot scan prunes with.
-                    SnapshotTable(self.spark, zone).commit_append(
-                        df.hint("rebalance", "event_date"),
-                        txn_id=(
-                            f"{txn_id}-{name}" if txn_id is not None else None
-                        ),
-                    )
-                else:
-                    # rebalance by the partition column (optimization
-                    # r16, guide §6): otherwise each task writes a
-                    # sliver into every touched date directory and the
-                    # zone accumulates (tasks × dates) tiny files per
-                    # batch; AQE packs whole advisory-sized files per
-                    # date and still splits a hot date across writers
-                    df.hint("rebalance", "event_date").write.mode(
-                        "append"
-                    ).partitionBy("event_date").parquet(zone)
+                # rebalance BEFORE the snapshot append (guide §6):
+                # _write_data never reshuffles (it also serves the
+                # Z-order/Hilbert layout commits, whose clustering a
+                # rebalance would destroy), so sliver control is the
+                # caller's job. Without it every batch appends one
+                # part file per upstream task; clustering by
+                # event_date also tightens the per-file min/max stats
+                # the snapshot scan prunes with.
+                SnapshotTable(self.spark, self.zone_path("processed", name)).commit_append(
+                    df.hint("rebalance", "event_date"),
+                    txn_id=f"{txn_id}-{name}" if txn_id is not None else None,
+                )
             if counts["unknown"] > 0:
                 routed["unknown"].drop("_corrupt_record").write.mode(
                     "append"
@@ -303,13 +230,8 @@ class HealthcareLakehouse:
 
     # --- one-shot pipeline (the full DAG run) ------------------------
 
-    def run_all(
-        self,
-        raw_path: str,
-        txn_id: str | None = None,
-        snapshot: bool | None = None,
-    ) -> dict[str, object]:
-        etl_counts = self.run_etl(raw_path, txn_id=txn_id, snapshot=snapshot)
+    def run_all(self, raw_path: str, txn_id: str | None = None) -> dict[str, object]:
+        etl_counts = self.run_etl(raw_path, txn_id=txn_id)
         self.run_models()
         out = self.run_reports()
         out["etl_counts"] = etl_counts

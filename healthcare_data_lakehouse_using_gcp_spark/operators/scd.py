@@ -1,8 +1,8 @@
 """Slowly-changing-dimension (SCD type 2) versioning: keep every
 historical version of a dimension row with its validity interval, so
 facts join to the attributes that were true WHEN THE FACT HAPPENED —
-the temporal correctness a latest-wins upsert (sources/upsert) throws
-away.
+the temporal correctness a latest-wins upsert (the "upsert" mode of
+streaming/pipeline.make_etl_sink) throws away.
 
 The reference's dimensions are snapshot-only (plans/dims rebuilds
 dim_patients from the latest staging state); this module is the

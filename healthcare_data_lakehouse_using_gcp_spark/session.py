@@ -71,9 +71,9 @@ def get_spark(
         # basket 143, so at 100 a process that repeats them evicted
         # every class before its next use and Janino recompiled the
         # whole run each time. At 1,000 a repeated run compiles only
-        # AQE's renumbered stages. The `stream --snapshot` sink loop
-        # gains nothing: it compiles 18, then 8 per micro-batch, at
-        # either size.
+        # AQE's renumbered stages. The `stream` sink loop gains
+        # nothing: it compiles 18, then 8 per micro-batch, at either
+        # size.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

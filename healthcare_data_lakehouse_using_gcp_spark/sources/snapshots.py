@@ -46,8 +46,9 @@ Why this holds at 100 TB:
   no-op returning the existing version when that token already
   committed — pass ``txn_id=f"batch-{batch_id}"`` from a Structured
   Streaming ``foreachBatch`` and micro-batch redelivery converges
-  instead of duplicating (the same idempotence upsert.merge_upsert
-  gives keyed zones, here for append-only ones).
+  instead of duplicating (streaming/pipeline.make_etl_sink does this
+  for every processed-zone route; ``merge_upsert`` takes the same
+  token for keyed zones).
 - **Deletes happen in exactly one place.** ``vacuum`` removes data
   files referenced by NO retained snapshot (plus their manifests);
   everything else only ever adds files. ``min_age_seconds`` guards

@@ -1,12 +1,15 @@
 """End-to-end lakehouse test: raw JSON → zones → fact → reports,
-including partition-pruning of the date-partitioned processed zone."""
+including manifest-level file skipping on the processed zone."""
 
 from __future__ import annotations
 
-import os
+import datetime as dt
+
+from pyspark.sql import functions as F
 
 from healthcare_data_lakehouse_using_gcp_spark.lakehouse import HealthcareLakehouse
 from healthcare_data_lakehouse_using_gcp_spark.sources.generator import HealthcareDataGenerator
+from healthcare_data_lakehouse_using_gcp_spark.sources.snapshots import SnapshotTable
 
 
 def test_full_pipeline(spark, cfg, tmp_path):
@@ -29,16 +32,26 @@ def test_full_pipeline(spark, cfg, tmp_path):
     }
     assert all(s in ("pass", "warn", "error") for s in out["gate_statuses"].values())
 
-    # processed zone is date-partitioned (hive-style directories)
-    vit_dir = os.path.join(str(tmp_path / "wh"), "processed", "vitals")
-    parts = [p for p in os.listdir(vit_dir) if p.startswith("event_date=")]
-    assert len(parts) > 1
+    # a second batch a month older: its commit's files cover disjoint
+    # event dates, so a single-date lookback can skip them
+    old = HealthcareDataGenerator(seed=24, now=cfg.as_of - dt.timedelta(days=30))
+    old_dir = tmp_path / "raw_old"
+    old_dir.mkdir()
+    (old_dir / "batch0.json").write_text("\n".join(old.generate_messages(400)))
+    lh.run_etl(str(old_dir))
 
-    # partition pruning: a single-date filter must scan < all partitions
-    one_date = parts[0].split("=", 1)[1]
-    df = spark.read.parquet(vit_dir).filter(f"event_date = DATE'{one_date}'")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan or df.count() < lh.read_processed("vitals").count()
+    vit = SnapshotTable(spark, lh.zone_path("processed", "vitals"))
+    one_date = str(
+        lh.read_processed("vitals").agg(F.max("event_date")).first()[0]
+    )
+    pred = ("event_date", "==", one_date)
+    keep, total = vit.prune_files(vit.latest_version(), pred)
+    assert 0 < len(keep) < total
+    on_date = F.col("event_date") == F.lit(one_date).cast("date")
+    pruned = lh.read_processed("vitals", prune=pred).filter(on_date)
+    full = lh.read_processed("vitals").filter(on_date)
+    assert pruned.count() == full.count() > 0
+    assert pruned.exceptAll(full).count() == full.exceptAll(pruned).count() == 0
 
 
 def test_facade_warn_gate_does_not_raise(spark, cfg, tmp_path):
@@ -145,53 +158,6 @@ def test_snapshot_append_packs_whole_files(spark, tmp_path):
     # 32-per-batch task count (AQE may split a hot date — allow 2x)
     assert 0 < len(files) <= 10, files
     assert st.read().count() == 20000
-
-
-def test_cli_txn_id_with_plain_append_is_usage_error():
-    # ADVICE r10: the documented incompatibility must surface as a
-    # clean argparse usage error (exit code 2), never run_etl's
-    # ValueError traceback — and it must fire BEFORE a SparkSession
-    # is built (this test would hang for ~20 s if it didn't).
-    import pytest
-
-    from healthcare_data_lakehouse_using_gcp_spark.__main__ import main
-
-    with pytest.raises(SystemExit) as e:
-        main([
-            "etl", "--raw", "/nonexistent", "--warehouse", "/nonexistent",
-            "--txn-id", "t1", "--plain-append",
-        ])
-    assert e.value.code == 2
-
-
-def test_partitioned_zone_write_packs_whole_files(spark, tmp_path):
-    # Optimization r16 (guide §6): a date-partitioned append used to
-    # emit one part file per (upstream task × date) — 32 partitions
-    # over 5 dates wrote ~160 slivers. The rebalance-by-partition-col
-    # clusters each date into whole advisory-sized files; same rows,
-    # same directories.
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from healthcare_data_lakehouse_using_gcp_spark.sources.readers import (
-        write_zone_table,
-    )
-
-    df = spark.range(0, 20000, 1, 32).select(
-        F.col("id"),
-        F.date_add(F.lit("2024-01-01"), (F.col("id") % 5).cast("int")).alias(
-            "event_date"
-        ),
-    )
-    write_zone_table(df, str(tmp_path), "processed", "demo", ["event_date"])
-    files = glob.glob(str(tmp_path / "processed" / "demo" / "*" / "*.parquet"))
-    dates = {f.rsplit("/", 2)[1] for f in files}
-    assert len(dates) == 5
-    # one file per date at this size (AQE may split a genuinely hot
-    # date — allow a small factor, never the old tasks×dates blow-up)
-    assert len(files) <= 2 * len(dates), files
-    assert spark.read.parquet(str(tmp_path / "processed" / "demo")).count() == 20000
 
 
 def test_run_etl_route_counts_equal_per_route_counts(spark, cfg, tmp_path):

@@ -300,7 +300,13 @@ def test_sorted_compaction_restores_file_skipping(spark, table):
     keep_before, total_before = table.prune_files(v, ("id", ">=", 300))
     frac_before = len(keep_before) / total_before
 
-    v2 = table.compact(target_file_bytes=20_000, sort_by=["id"])
+    # a quarter of the table's own bytes: the sorted rewrite lands in
+    # ~4 files whatever file count the appends produced on this host
+    n_bytes = sum(
+        os.path.getsize(os.path.join(table.root, f))
+        for f in table._load(v)["files"]
+    )
+    v2 = table.compact(target_file_bytes=n_bytes // 4, sort_by=["id"])
     assert v2 > v
     keep_after, total_after = table.prune_files(v2, ("id", ">=", 300))
     assert total_after > 1

@@ -88,9 +88,8 @@ def test_windowed_counts_batch_vs_stream(spark, cfg, tmp_path):
 
 
 def test_etl_stream_writes_sinks(spark, cfg, tmp_path):
-    """T5: multi-sink fan-out writes parquet per entity route."""
-    import os
-
+    """T5: multi-sink fan-out commits a snapshot table per entity route."""
+    from healthcare_data_lakehouse_using_gcp_spark.lakehouse import HealthcareLakehouse
     from healthcare_data_lakehouse_using_gcp_spark.streaming.pipeline import start_etl_stream
 
     gen = HealthcareDataGenerator(seed=17)
@@ -105,7 +104,7 @@ def test_etl_stream_writes_sinks(spark, cfg, tmp_path):
         time.sleep(1)
     q.stop()
     q.awaitTermination(30)
-    vit = spark.read.parquet(os.path.join(wh, "processed", "vitals"))
+    vit = HealthcareLakehouse(spark, wh, cfg).read_processed("vitals")
     assert vit.count() > 0
     assert "data_quality_score" in vit.columns
 
@@ -160,11 +159,10 @@ def test_rate_source_streams_unbounded(spark):
 
 @pytest.mark.slow  # ~2 min multi-batch kill/replay e2e (round-close battery)
 def test_etl_sink_upsert_replay_idempotent(spark, cfg, tmp_path):
-    """upsert sink mode: replaying the SAME micro-batch (at-least-once
-    delivery) leaves the processed zone unchanged; append mode
-    duplicates (reference parity)."""
-    import os
-
+    """upsert sink mode: replaying the SAME micro-batch under a new
+    batch id (at-least-once delivery) leaves the processed zone
+    unchanged."""
+    from healthcare_data_lakehouse_using_gcp_spark.lakehouse import HealthcareLakehouse
     from healthcare_data_lakehouse_using_gcp_spark.streaming.pipeline import make_etl_sink
 
     gen = HealthcareDataGenerator(seed=23)
@@ -172,26 +170,34 @@ def test_etl_sink_upsert_replay_idempotent(spark, cfg, tmp_path):
     batch = spark.createDataFrame([(m,) for m in msgs], "value string")
 
     wh_up = str(tmp_path / "up")
-    sink = make_etl_sink(wh_up, cfg, upsert=True)
+    lake = HealthcareLakehouse(spark, wh_up, cfg)
+    sink = make_etl_sink(wh_up, cfg, mode="upsert")
     sink(batch, 0)
-    counts1 = {
-        e: spark.read.parquet(os.path.join(wh_up, "processed", e)).count()
-        for e in ("vitals", "claims", "ehr")
-    }
+    counts1 = {e: lake.read_processed(e).count() for e in ("vitals", "claims", "ehr")}
     assert all(v > 0 for v in counts1.values())
     sink(batch, 1)  # replay
-    counts2 = {
-        e: spark.read.parquet(os.path.join(wh_up, "processed", e)).count()
-        for e in ("vitals", "claims", "ehr")
-    }
+    counts2 = {e: lake.read_processed(e).count() for e in ("vitals", "claims", "ehr")}
     assert counts2 == counts1
 
-    wh_app = str(tmp_path / "app")
-    append_sink = make_etl_sink(wh_app, cfg, upsert=False)
-    append_sink(batch, 0)
-    append_sink(batch, 1)
-    n_vitals = spark.read.parquet(os.path.join(wh_app, "processed", "vitals")).count()
-    assert n_vitals == 2 * counts1["vitals"]  # reference append semantics
+
+def test_sink_after_run_etl_keeps_both_batches(spark, cfg, tmp_path):
+    """run_etl, then the default sink on a second batch into the same
+    warehouse: the zone must hold both batches' rows. The sink used to
+    write plain parquet next to run_etl's manifest, where no read saw
+    it."""
+    from healthcare_data_lakehouse_using_gcp_spark.lakehouse import HealthcareLakehouse
+    from healthcare_data_lakehouse_using_gcp_spark.streaming.pipeline import make_etl_sink
+
+    msgs = HealthcareDataGenerator(seed=43).generate_messages(200)
+    first = spark.createDataFrame([(m,) for m in msgs[:100]], "value string")
+    second = spark.createDataFrame([(m,) for m in msgs[100:]], "value string")
+    wh = str(tmp_path / "wh")
+    lake = HealthcareLakehouse(spark, wh, cfg)
+    c1 = lake.run_etl(raw_df=first)
+    make_etl_sink(wh, cfg)(second, 0)
+    c2 = {k: df.count() for k, df in build_etl(second, cfg).items()}
+    for e in ("vitals", "claims", "ehr"):
+        assert lake.read_processed(e).count() == c1[e] + c2[e], e
 
 
 def test_etl_sink_snapshot_mode_exactly_once_kill_and_replay(spark, cfg, tmp_path):
@@ -254,32 +260,6 @@ def test_lakehouse_run_etl_txn_id_replay_converges(spark, cfg, tmp_path):
     frames = lake.run_models()
     fact = frames["fact_patient_encounters"]
     assert fact.count() == fact.dropDuplicates().count()
-    # mode mixing is rejected loudly (ADVICE r8): a plain append into
-    # the now-snapshot-managed zones would write unreferenced files
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="snapshot-managed"):
-        lake.run_etl(raw_df=raw)
-
-
-def test_lakehouse_rejects_snapshot_over_plain_zone(spark, cfg, tmp_path):
-    """ADVICE r8: run_etl(txn_id=...) on a warehouse that already
-    holds PLAIN appended parquet must raise instead of creating a
-    manifest that silently shadows every previously appended row."""
-    from healthcare_data_lakehouse_using_gcp_spark.lakehouse import HealthcareLakehouse
-
-    gen = HealthcareDataGenerator(seed=33)
-    raw = spark.createDataFrame(
-        [(m,) for m in gen.generate_messages(80)], "value string"
-    )
-    lake = HealthcareLakehouse(spark, str(tmp_path / "wh"), cfg)
-    n_plain = lake.run_etl(raw_df=raw)["vitals"]  # plain mode first
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="PLAIN appended parquet"):
-        lake.run_etl(raw_df=raw, txn_id="late-snapshot")
-    # the plain zone is untouched and still fully readable
-    assert lake.read_processed("vitals").count() == n_plain
 
 
 def test_rollup_sink_state_converges_under_replay(spark, tmp_path):
@@ -699,11 +679,10 @@ def test_join_view_sink_maintains_materialized_join(spark, tmp_path):
 
 
 def test_lakehouse_run_etl_snapshot_without_txn(spark, cfg, tmp_path):
-    """r10 (ROADMAP item 3): snapshot sink mode is decoupled from
-    idempotence — run_etl(snapshot=True) with NO txn token commits
-    the entity zones through manifests (the CLI's new default); a
-    re-run appends a second version (no replay protection without a
-    token); txn_id with snapshot=False is a contract error."""
+    """run_etl with NO txn token still commits the entity zones
+    through manifests; a re-run appends a second version (no replay
+    protection without a token). No other zone format exists, so
+    snapshot=False is an error."""
     from healthcare_data_lakehouse_using_gcp_spark.lakehouse import (
         HealthcareLakehouse,
     )
@@ -728,11 +707,6 @@ def test_lakehouse_run_etl_snapshot_without_txn(spark, cfg, tmp_path):
     # models build from manifest-resolved zones transparently
     fact = lake.run_models()["fact_patient_encounters"]
     assert fact.count() > 0
-    import pytest as _pytest
-
-    # plain append into the snapshot zone still rejected
-    with _pytest.raises(ValueError, match="snapshot-managed"):
+    with pytest.raises(ValueError, match="snapshot must be True"):
         lake.run_etl(raw_df=raw, snapshot=False)
-    # txn idempotence requires the manifest sink
-    with _pytest.raises(ValueError, match="txn_id requires"):
-        lake.run_etl(raw_df=raw, txn_id="t1", snapshot=False)
+    assert vit.latest_version() == 2
