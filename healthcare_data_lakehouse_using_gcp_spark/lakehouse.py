@@ -29,20 +29,13 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .config import DEFAULT_CONFIG, EngineConfig
-from .operators.etl import build_etl_cached, route_counts
+from .operators.etl import build_etl_cached, route_counts, with_event_date
 from .plans import reports
 from .plans.models import ModelRunner, healthcare_models
 from .sources.readers import read_json_batch
 from .sources.snapshots import SnapshotTable
-
-ENTITY_DATE_COL = {
-    "vitals": "timestamp",
-    "claims": "service_date",
-    "ehr": "visit_date",
-}
 
 
 class HealthcareLakehouse:
@@ -111,10 +104,7 @@ class HealthcareLakehouse:
             # (healthcare_etl_pipeline.py:351-355). One aggregate job
             # also fills the cache the route writes then read.
             counts = route_counts(enriched)
-            for name, date_col in ENTITY_DATE_COL.items():
-                df = routed[name].withColumn(
-                    "event_date", F.to_date(F.col(date_col))
-                )
+            for name, df in with_event_date(routed).items():
                 # rebalance BEFORE the snapshot append (guide §6):
                 # _write_data never reshuffles (it also serves the
                 # Z-order/Hilbert layout commits, whose clustering a

@@ -13,8 +13,13 @@ Beam stage → Spark mapping (SURVEY.md §2.9):
   required-field validation (P1)     → isNull flag expressions
   range anomalies (P2, :84-100)      → between() flags
   DataQualityFilter (P3/U2,:109-121) → one filter()
-  DataEnricher (U3, :123-208)        → withColumn chain
+  DataEnricher (U3, :123-208)        → one withColumns projection
   DataPartitioner (P7/U4, :210-223)  → 4 filters off one parsed DF
+
+The transform is fixed per EngineConfig, so every stage's Column
+expressions are built once per config (functions/prebuilt.py) and
+applied to each new batch or micro-batch; only the DataFrame
+operations themselves cross py4j per call.
 
 Scale note: all expressions are JVM-side and codegen-friendly; the
 parsed DF should be narrow-transformed only (no shuffle anywhere in
@@ -24,11 +29,12 @@ partition count.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..functions import scalars as S
+from ..functions.prebuilt import prebuilt
 from ..schemas import envelope_schema
 
 # demux route of each known data_type; any other type routes to
@@ -47,6 +53,36 @@ REQUIRED_FIELDS = {
 }
 
 
+@prebuilt
+def _parse_exprs(cfg: EngineConfig) -> tuple:
+    schema = envelope_schema()
+    decode = (
+        F.from_json(
+            F.col("value"),
+            schema,
+            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"},
+        ).alias("r"),
+        F.col("value").alias("_raw_message"),
+    )
+    unpack = (F.col("r.*"), F.col("_raw_message"))
+    payload_fields = [f.name for f in schema.fields if f.name != "_corrupt_record"]
+    all_null = F.lit(True)
+    for name in payload_fields:
+        all_null = all_null & F.col(name).isNull()
+    corrupt = F.when(
+        all_null & F.col("_corrupt_record").isNull(), F.col("_raw_message")
+    ).otherwise(F.col("_corrupt_record"))
+    data_type = F.when(
+        F.col("_corrupt_record").isNull(),
+        F.coalesce(F.col("data_type"), F.lit("unknown")),
+    ).otherwise(F.col("data_type"))
+    metadata = {
+        "processed_at": S.now_col(cfg),  # healthcare_etl_pipeline.py:55
+        "pipeline_version": F.lit(cfg.pipeline_version),  # :56
+    }
+    return decode, unpack, corrupt, data_type, metadata
+
+
 def parse_envelope(raw: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
     """S2: JSON bytes → typed columns + processing metadata.
 
@@ -55,49 +91,54 @@ def parse_envelope(raw: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> DataFr
     lands in ``_corrupt_record`` (PERMISSIVE), mirroring the error
     record of healthcare_etl_pipeline.py:70-75; we keep the raw
     message for the error sink instead of a dict with an 'error' key.
+
+    from_json yields a NULL struct (all fields null) for malformed
+    input rather than populating the corrupt column; the raw text is
+    recovered so error records keep the original payload. Only a TRUE
+    parse failure (every parsed field null) is corrupt — well-formed
+    JSON that merely lacks data_type routes to 'unknown', matching
+    element.get('data_type', 'unknown')
+    (healthcare_etl_pipeline.py:58, :222-223).
     """
-    schema = envelope_schema()
-    parsed = raw.select(
-        F.from_json(
-            F.col("value"),
-            schema,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"},
-        ).alias("r"),
-        F.col("value").alias("_raw_message"),
-    ).select("r.*", "_raw_message")
-    # from_json yields a NULL struct (all fields null) for malformed
-    # input rather than populating the corrupt column; recover the raw
-    # text so error records keep the original payload. Only a TRUE
-    # parse failure (every parsed field null) is corrupt — well-formed
-    # JSON that merely lacks data_type routes to 'unknown', matching
-    # element.get('data_type', 'unknown')
-    # (healthcare_etl_pipeline.py:58, :222-223).
-    payload_fields = [f.name for f in schema.fields if f.name != "_corrupt_record"]
-    all_null = F.lit(True)
-    for name in payload_fields:
-        all_null = all_null & F.col(name).isNull()
-    parsed = (
-        parsed.withColumn(
-            "_corrupt_record",
-            F.when(all_null & F.col("_corrupt_record").isNull(), F.col("_raw_message")).otherwise(
-                F.col("_corrupt_record")
-            ),
-        )
-        .withColumn(
-            "data_type",
-            F.when(
-                F.col("_corrupt_record").isNull(),
-                F.coalesce(F.col("data_type"), F.lit("unknown")),
-            ).otherwise(F.col("data_type")),
-        )
+    decode, unpack, corrupt, data_type, metadata = _parse_exprs(cfg)
+    return (
+        raw.select(*decode)
+        .select(*unpack)
+        .withColumn("_corrupt_record", corrupt)
+        .withColumn("data_type", data_type)
         .drop("_raw_message")
+        .withColumns(metadata)
     )
-    return parsed.withColumns(
-        {
-            "processed_at": S.now_col(cfg),  # healthcare_etl_pipeline.py:55
-            "pipeline_version": F.lit(cfg.pipeline_version),  # :56
-        }
-    )
+
+
+@prebuilt
+def _flag_columns(cfg: EngineConfig) -> dict[str, Column]:
+    t = cfg.thresholds
+    missing = F.lit(False)
+    for dtype, fields in REQUIRED_FIELDS.items():
+        cond = F.lit(False)
+        for name in fields:
+            cond = cond | F.col(name).isNull()
+        missing = F.when(F.col("data_type") == dtype, cond).otherwise(missing)
+    return {
+        "missing_required": F.coalesce(missing, F.lit(False)),
+        # healthcare_etl_pipeline.py:84-89
+        "heart_rate_anomaly": F.when(
+            F.col("data_type") == "patient_vitals",
+            S.range_anomaly(F.col("heart_rate"), t.min_heart_rate, t.max_heart_rate),
+        ).otherwise(F.lit(False)),
+        "temperature_anomaly": F.when(
+            F.col("data_type") == "patient_vitals",
+            S.range_anomaly(F.col("temperature"), t.min_temperature, t.max_temperature),
+        ).otherwise(F.lit(False)),
+        # healthcare_etl_pipeline.py:98-100 (amount <= 0)
+        "amount_anomaly": F.when(
+            (F.col("data_type") == "insurance_claim")
+            & F.col("total_amount").isNotNull()
+            & (F.col("total_amount") <= 0),
+            F.lit(True),
+        ).otherwise(F.lit(False)),
+    }
 
 
 def with_validation_flags(parsed: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
@@ -107,37 +148,18 @@ def with_validation_flags(parsed: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG)
     (healthcare_etl_pipeline.py:58-69); declaratively that is one
     boolean per condition.
     """
-    t = cfg.thresholds
-    missing = F.lit(False)
-    for dtype, fields in REQUIRED_FIELDS.items():
-        cond = F.lit(False)
-        for name in fields:
-            cond = cond | F.col(name).isNull()
-        missing = F.when(F.col("data_type") == dtype, cond).otherwise(missing)
-    return parsed.withColumns(
-        {
-            "missing_required": F.coalesce(missing, F.lit(False)),
-            # healthcare_etl_pipeline.py:84-89
-            "heart_rate_anomaly": F.when(
-                F.col("data_type") == "patient_vitals",
-                S.range_anomaly(F.col("heart_rate"), t.min_heart_rate, t.max_heart_rate),
-            ).otherwise(F.lit(False)),
-            "temperature_anomaly": F.when(
-                F.col("data_type") == "patient_vitals",
-                S.range_anomaly(F.col("temperature"), t.min_temperature, t.max_temperature),
-            ).otherwise(F.lit(False)),
-            # healthcare_etl_pipeline.py:98-100 (amount <= 0)
-            "amount_anomaly": F.when(
-                (F.col("data_type") == "insurance_claim")
-                & F.col("total_amount").isNotNull()
-                & (F.col("total_amount") <= 0),
-                F.lit(True),
-            ).otherwise(F.lit(False)),
-        }
-    )
+    return parsed.withColumns(_flag_columns(cfg))
 
 
 ANOMALY_FLAGS = ["heart_rate_anomaly", "temperature_anomaly", "amount_anomaly"]
+
+
+@prebuilt
+def _quality_condition() -> Column:
+    cond = F.col("_corrupt_record").isNull() & ~F.col("missing_required")
+    for flag in ANOMALY_FLAGS:
+        cond = cond & ~F.col(flag)
+    return cond
 
 
 def quality_filter(flagged: DataFrame) -> DataFrame:
@@ -148,10 +170,46 @@ def quality_filter(flagged: DataFrame) -> DataFrame:
     errors are silently dropped here, NOT routed to the error sink
     (SURVEY.md §3.1 step 5).
     """
-    cond = F.col("_corrupt_record").isNull() & ~F.col("missing_required")
-    for flag in ANOMALY_FLAGS:
-        cond = cond & ~F.col(flag)
-    return flagged.filter(cond)
+    return flagged.filter(_quality_condition())
+
+
+@prebuilt
+def _enrich_columns(cfg: EngineConfig) -> dict[str, Column]:
+    t = cfg.thresholds
+    missing_count = (
+        (F.col("patient_id").isNull() | (F.col("patient_id") == "")).cast("int")
+        + (F.col("timestamp").isNull() | (F.col("timestamp") == "")).cast("int")
+    )
+    anomaly_count = sum(F.col(f).cast("int") for f in ANOMALY_FLAGS)
+    ts = F.to_timestamp(F.col("timestamp"))
+    service_d = F.to_date(F.col("service_date"))
+    submission_d = F.to_date(F.col("submission_date"))
+    return {
+        "data_quality_score": S.quality_score(missing_count, anomaly_count),
+        # vitals enrichment (:164-175)
+        "heart_rate_category": F.when(
+            F.col("data_type") == "patient_vitals",
+            S.heart_rate_category(F.col("heart_rate"), t),
+        ),
+        "hour_of_day": F.when(F.col("data_type") == "patient_vitals", S.hour_of_day(ts)),
+        "day_of_week": F.when(F.col("data_type") == "patient_vitals", S.day_of_week(ts)),
+        # claims enrichment (:182-194)
+        "processing_days": F.when(
+            F.col("data_type") == "insurance_claim",
+            F.datediff(submission_d, service_d),
+        ),
+        "amount_category": F.when(
+            F.col("data_type") == "insurance_claim",
+            S.amount_category(F.col("total_amount")),
+        ),
+        # ehr enrichment (:201-206)
+        "medication_count": F.when(
+            F.col("data_type") == "ehr_record", F.size(F.col("medications"))
+        ),
+        "lab_test_count": F.when(
+            F.col("data_type") == "ehr_record", F.size(F.map_keys(F.col("lab_results")))
+        ),
+    }
 
 
 def enrich(clean: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
@@ -164,43 +222,41 @@ def enrich(clean: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
     construction (the filter ran first), but the expression keeps the
     general form so the function is also correct pre-filter.
     """
-    t = cfg.thresholds
-    missing_count = (
-        (F.col("patient_id").isNull() | (F.col("patient_id") == "")).cast("int")
-        + (F.col("timestamp").isNull() | (F.col("timestamp") == "")).cast("int")
-    )
-    anomaly_count = sum(F.col(f).cast("int") for f in ANOMALY_FLAGS)
-    ts = F.to_timestamp(F.col("timestamp"))
-    service_d = F.to_date(F.col("service_date"))
-    submission_d = F.to_date(F.col("submission_date"))
-    return clean.withColumns(
-        {
-            "data_quality_score": S.quality_score(missing_count, anomaly_count),
-            # vitals enrichment (:164-175)
-            "heart_rate_category": F.when(
-                F.col("data_type") == "patient_vitals",
-                S.heart_rate_category(F.col("heart_rate"), t),
-            ),
-            "hour_of_day": F.when(F.col("data_type") == "patient_vitals", S.hour_of_day(ts)),
-            "day_of_week": F.when(F.col("data_type") == "patient_vitals", S.day_of_week(ts)),
-            # claims enrichment (:182-194)
-            "processing_days": F.when(
-                F.col("data_type") == "insurance_claim",
-                F.datediff(submission_d, service_d),
-            ),
-            "amount_category": F.when(
-                F.col("data_type") == "insurance_claim",
-                S.amount_category(F.col("total_amount")),
-            ),
-            # ehr enrichment (:201-206)
-            "medication_count": F.when(
-                F.col("data_type") == "ehr_record", F.size(F.col("medications"))
-            ),
-            "lab_test_count": F.when(
-                F.col("data_type") == "ehr_record", F.size(F.map_keys(F.col("lab_results")))
-            ),
-        }
-    )
+    return clean.withColumns(_enrich_columns(cfg))
+
+
+ROUTE_COLS = {
+    "vitals": [
+        "patient_id", "timestamp", "heart_rate", "blood_pressure_systolic",
+        "blood_pressure_diastolic", "temperature", "oxygen_saturation",
+        "respiratory_rate", "device_id", "location", "processed_at",
+        "pipeline_version", "data_quality_score", "heart_rate_category",
+        "hour_of_day", "day_of_week",
+    ],
+    "claims": [
+        "claim_id", "patient_id", "provider_id", "service_date",
+        "diagnosis_codes", "procedure_codes", "total_amount", "insurance_type",
+        "claim_status", "submission_date", "processed_at", "pipeline_version",
+        "data_quality_score", "processing_days", "amount_category",
+    ],
+    "ehr": [
+        "record_id", "patient_id", "visit_date", "provider_id", "diagnosis",
+        "treatment", "medications", "lab_results", "notes", "processed_at",
+        "pipeline_version", "data_quality_score", "medication_count",
+        "lab_test_count",
+    ],
+}
+
+
+@prebuilt
+def _route_exprs() -> tuple[dict[str, tuple[Column, tuple[Column, ...]]], Column]:
+    routes = {
+        route: (F.col("data_type") == dtype, tuple(F.col(c) for c in ROUTE_COLS[route]))
+        for dtype, route in ROUTE_OF_TYPE.items()
+    }
+    # well-formed rows with unrecognized data_type (:222-223)
+    unknown = F.col("_corrupt_record").isNull() & ~F.col("data_type").isin(*ROUTE_OF_TYPE)
+    return routes, unknown
 
 
 def demux(enriched: DataFrame) -> dict[str, DataFrame]:
@@ -211,36 +267,33 @@ def demux(enriched: DataFrame) -> dict[str, DataFrame]:
     ``.cache()`` upstream (or write partitionBy("data_type")) so the
     scan+parse isn't re-executed per branch.
     """
-    route_cols = {
-        "vitals": [
-            "patient_id", "timestamp", "heart_rate", "blood_pressure_systolic",
-            "blood_pressure_diastolic", "temperature", "oxygen_saturation",
-            "respiratory_rate", "device_id", "location", "processed_at",
-            "pipeline_version", "data_quality_score", "heart_rate_category",
-            "hour_of_day", "day_of_week",
-        ],
-        "claims": [
-            "claim_id", "patient_id", "provider_id", "service_date",
-            "diagnosis_codes", "procedure_codes", "total_amount", "insurance_type",
-            "claim_status", "submission_date", "processed_at", "pipeline_version",
-            "data_quality_score", "processing_days", "amount_category",
-        ],
-        "ehr": [
-            "record_id", "patient_id", "visit_date", "provider_id", "diagnosis",
-            "treatment", "medications", "lab_results", "notes", "processed_at",
-            "pipeline_version", "data_quality_score", "medication_count",
-            "lab_test_count",
-        ],
+    routes, unknown = _route_exprs()
+    out = {route: enriched.filter(cond).select(*cols) for route, (cond, cols) in routes.items()}
+    out["unknown"] = enriched.filter(unknown)
+    return out
+
+
+# the column each entity zone derives its event_date partition from
+ENTITY_DATE_COL = {
+    "vitals": "timestamp",
+    "claims": "service_date",
+    "ehr": "visit_date",
+}
+
+
+@prebuilt
+def _event_date_columns() -> dict[str, Column]:
+    return {name: F.to_date(F.col(c)) for name, c in ENTITY_DATE_COL.items()}
+
+
+def with_event_date(routed: dict[str, DataFrame]) -> dict[str, DataFrame]:
+    """The three entity routes, each with its zone's derived
+    ``event_date`` column; batch run_etl and the streaming sink both
+    commit these frames."""
+    return {
+        name: routed[name].withColumn("event_date", col)
+        for name, col in _event_date_columns().items()
     }
-    routes = {
-        route: enriched.filter(F.col("data_type") == dtype).select(route_cols[route])
-        for dtype, route in ROUTE_OF_TYPE.items()
-    }
-    # well-formed rows with unrecognized data_type (:222-223)
-    routes["unknown"] = enriched.filter(
-        F.col("_corrupt_record").isNull() & ~F.col("data_type").isin(*ROUTE_OF_TYPE)
-    )
-    return routes
 
 
 def route_counts(enriched: DataFrame) -> dict[str, int]:

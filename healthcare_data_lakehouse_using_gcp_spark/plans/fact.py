@@ -26,14 +26,21 @@ measurement_timestamp) — a strict refinement of the join key — so
 Catalyst reuses the join exchange where possible and AQE handles
 patient-level skew. The final groupBy keys are a superset of the
 window partition keys, again avoiding a full re-shuffle.
+
+The literal plan's lookback filters, band-join conditions, proximity
+ranks, GROUP BY keys, aggregates and projection are built once per
+EngineConfig (functions/prebuilt.py) and applied to each run's
+staging frames; the opt-in optimized variant shares only the
+lookback scans.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, EngineConfig
+from ..functions.prebuilt import prebuilt
 from ..functions.scalars import now_col, today_col
 
 VITALS_COLS = [
@@ -60,6 +67,35 @@ GROUP_COLS = [
 ]
 
 
+CLAIMS_COLS = [
+    "patient_id", "claim_id", "service_date", "submission_date", "provider_id",
+    "total_amount", "insurance_type", "insurance_category", "claim_status",
+    "lifecycle_stage", "amount_category", "value_category", "processing_days",
+    "processing_efficiency", "diagnosis_count", "procedure_count",
+    "daily_claim_value", "denied_claim", "paid_claim", "pending_claim",
+    "high_value_claim",
+]
+
+EHR_COLS = [
+    "patient_id", "record_id", "visit_date", "provider_id", "diagnosis",
+    "treatment", "medications", "lab_results", "medication_count",
+    "lab_test_count", "notes",
+]
+
+
+@prebuilt
+def _lookback_exprs(cfg: EngineConfig) -> tuple[tuple[tuple[Column, ...], Column], ...]:
+    def cols(names: list[str]) -> tuple[Column, ...]:
+        return tuple(F.col(c) for c in names)
+
+    vitals = F.col("measurement_timestamp") >= (
+        now_col(cfg) - F.expr(f"INTERVAL {cfg.lookback_days} DAYS")
+    )
+    claims = F.col("service_date") >= F.date_sub(today_col(cfg), cfg.lookback_days)
+    ehr = F.col("visit_date") >= F.date_sub(today_col(cfg), cfg.lookback_days)
+    return (cols(VITALS_COLS), vitals), (cols(CLAIMS_COLS), claims), (cols(EHR_COLS), ehr)
+
+
 def _lookback_scans(
     stg_vitals: DataFrame,
     stg_claims: DataFrame,
@@ -68,99 +104,41 @@ def _lookback_scans(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """CTE scans with lookback predicates (:31-78) — these reach the
     parquet scan as pushed filters / partition pruning."""
-    vitals = stg_vitals.select(*VITALS_COLS).filter(
-        F.col("measurement_timestamp")
-        >= (now_col(cfg) - F.expr(f"INTERVAL {cfg.lookback_days} DAYS"))
-    )
-    claims = stg_claims.select(
-        "patient_id", "claim_id", "service_date", "submission_date", "provider_id",
-        "total_amount", "insurance_type", "insurance_category", "claim_status",
-        "lifecycle_stage", "amount_category", "value_category", "processing_days",
-        "processing_efficiency", "diagnosis_count", "procedure_count",
-        "daily_claim_value", "denied_claim", "paid_claim", "pending_claim",
-        "high_value_claim",
-    ).filter(F.col("service_date") >= F.date_sub(today_col(cfg), cfg.lookback_days))
-    ehr = stg_ehr.select(
-        "patient_id", "record_id", "visit_date", "provider_id", "diagnosis",
-        "treatment", "medications", "lab_results", "medication_count",
-        "lab_test_count", "notes",
-    ).filter(F.col("visit_date") >= F.date_sub(today_col(cfg), cfg.lookback_days))
-    return vitals, claims, ehr
-
-
-def fact_patient_encounters(
-    stg_vitals: DataFrame,
-    stg_claims: DataFrame,
-    stg_ehr: DataFrame,
-    cfg: EngineConfig = DEFAULT_CONFIG,
-    optimized: bool | None = None,
-) -> DataFrame:
-    # explicit arg wins; otherwise the config flag picks the variant
-    # (lets ModelRunner/lakehouse users opt in via EngineConfig alone)
-    if optimized is None:
-        optimized = cfg.fact_optimized
-    if optimized:
-        return fact_patient_encounters_optimized(stg_vitals, stg_claims, stg_ehr, cfg)
-    band = cfg.band_days
-    vitals, claims, ehr = _lookback_scans(stg_vitals, stg_claims, stg_ehr, cfg)
-
-    # --- vitals ⟕ claims band join + proximity rank (:81-115)
-    v, c = vitals.alias("v"), claims.alias("c")
-    vdate = F.to_date(F.col("v.measurement_timestamp"))
-    claim_dist = F.abs(F.datediff(vdate, F.col("c.service_date")))
-    vc = (
-        v.join(
-            c,
-            (F.col("v.patient_id") == F.col("c.patient_id")) & (claim_dist <= band),
-            "left",
-        )
-        .drop(F.col("c.patient_id"))
-        .withColumnRenamed("provider_id", "claim_provider_id")
-        .withColumn("days_from_service", F.datediff(vdate, F.col("service_date")))
-        .withColumn(
-            "claim_proximity_rank",
-            F.row_number().over(
-                Window.partitionBy("patient_id", "measurement_timestamp").orderBy(
-                    F.abs(
-                        F.datediff(F.to_date("measurement_timestamp"), F.col("service_date"))
-                    ).asc_nulls_last(),
-                    F.col("claim_id").asc_nulls_last(),  # deterministic tie-break
-                )
-            ),
-        )
+    return tuple(
+        df.select(*cols).filter(keep)
+        for df, (cols, keep) in zip((stg_vitals, stg_claims, stg_ehr), _lookback_exprs(cfg))
     )
 
-    # --- (vitals⋈claims) ⟕ ehr band join + proximity rank (:117-142)
-    vc_a, e = vc.alias("vc"), ehr.alias("e")
-    vcdate = F.to_date(F.col("vc.measurement_timestamp"))
-    ehr_dist = F.abs(F.datediff(vcdate, F.col("e.visit_date")))
-    enc = (
-        vc_a.join(
-            e,
-            (F.col("vc.patient_id") == F.col("e.patient_id")) & (ehr_dist <= band),
-            "left",
-        )
-        .drop(F.col("e.patient_id"))
-        .withColumnRenamed("provider_id", "ehr_provider_id")
-        .withColumn("days_from_visit", F.datediff(vcdate, F.col("visit_date")))
-        .withColumn(
-            "ehr_proximity_rank",
-            F.row_number().over(
-                Window.partitionBy("patient_id", "measurement_timestamp").orderBy(
-                    F.abs(
-                        F.datediff(F.to_date("measurement_timestamp"), F.col("visit_date"))
-                    ).asc_nulls_last(),
-                    F.col("record_id").asc_nulls_last(),
-                    F.col("claim_id").asc_nulls_last(),  # deterministic within cross product
-                )
-            ),
+
+@prebuilt
+def _band_join_exprs(
+    cfg: EngineConfig, left: str, right: str, date_col: str, tie_breaks: tuple[str, ...]
+) -> tuple[Column, Column, Column, Column]:
+    """The ⟕ band join of ``left``'s vitals rows to ``right``'s rows
+    within band_days of ``right.date_col``: (join condition, right
+    key to drop, signed day distance, proximity rank)."""
+    ldate = F.to_date(F.col(f"{left}.measurement_timestamp"))
+    dist = F.abs(F.datediff(ldate, F.col(f"{right}.{date_col}")))
+    on = (F.col(f"{left}.patient_id") == F.col(f"{right}.patient_id")) & (
+        dist <= cfg.band_days
+    )
+    rank = F.row_number().over(
+        Window.partitionBy("patient_id", "measurement_timestamp").orderBy(
+            F.abs(
+                F.datediff(F.to_date("measurement_timestamp"), F.col(date_col))
+            ).asc_nulls_last(),
+            *[F.col(c).asc_nulls_last() for c in tie_breaks],  # deterministic tie-break
         )
     )
+    return on, F.col(f"{right}.patient_id"), F.datediff(ldate, F.col(date_col)), rank
 
-    # --- rank-1 CASE projection + wide aggregation (:144-239)
+
+@prebuilt
+def _encounter_exprs(cfg: EngineConfig) -> tuple[tuple[Column, ...], ...]:
+    """GROUP BY keys, aggregates and the rank-1 CASE projection (:144-239)."""
     rank1_claim = F.col("claim_proximity_rank") == 1
     rank1_ehr = F.col("ehr_proximity_rank") == 1
-    agg = enc.groupBy(*GROUP_COLS).agg(
+    aggs = (
         F.countDistinct("claim_id").alias("total_claims"),
         F.countDistinct("record_id").alias("total_ehr_records"),
         F.sum("total_amount").alias("total_claim_value"),
@@ -181,13 +159,8 @@ def fact_patient_encounters(
     )
     total_claims = F.col("total_claims")
     total_ehr = F.col("total_ehr_records")
-    return agg.select(
-        "patient_id", "measurement_timestamp", "device_id", "location",
-        "heart_rate", "blood_pressure_systolic", "blood_pressure_diastolic",
-        "temperature", "oxygen_saturation", "respiratory_rate", "heart_rate_category",
-        "pulse_pressure", "rate_pressure_product", "shift_category", "day_category",
-        "quality_category", "low_oxygen_alert", "elevated_heart_rate_alert",
-        "low_heart_rate_alert", "fever_alert",
+    projection = (
+        *[F.col(c) for c in VITALS_COLS],
         F.when(rank1_claim, F.col("claim_id")).alias("primary_claim_id"),
         F.when(rank1_claim, F.col("service_date")).alias("primary_service_date"),
         F.when(rank1_claim, F.col("total_amount")).alias("primary_claim_amount"),
@@ -200,9 +173,15 @@ def fact_patient_encounters(
         F.when(rank1_ehr, F.col("treatment")).alias("primary_treatment"),
         F.when(rank1_ehr, F.col("medication_count")).alias("primary_medication_count"),
         F.when(rank1_ehr, F.col("lab_test_count")).alias("primary_lab_test_count"),
-        "total_claims", "total_ehr_records", "total_claim_value", "avg_processing_days",
-        "denied_claims_count", "paid_claims_count", "pending_claims_count",
-        "high_value_claims_count", "encounter_complexity_score",
+        *[
+            F.col(c)
+            for c in (
+                "total_claims", "total_ehr_records", "total_claim_value",
+                "avg_processing_days", "denied_claims_count", "paid_claims_count",
+                "pending_claims_count", "high_value_claims_count",
+                "encounter_complexity_score",
+            )
+        ],
         # risk indicators (:208-214)
         F.when(
             F.col("low_oxygen_alert")
@@ -226,6 +205,54 @@ def fact_patient_encounters(
         now_col(cfg).alias("created_at"),
         now_col(cfg).alias("updated_at"),
     )
+    return tuple(F.col(c) for c in GROUP_COLS), aggs, projection
+
+
+def fact_patient_encounters(
+    stg_vitals: DataFrame,
+    stg_claims: DataFrame,
+    stg_ehr: DataFrame,
+    cfg: EngineConfig = DEFAULT_CONFIG,
+    optimized: bool | None = None,
+) -> DataFrame:
+    # explicit arg wins; otherwise the config flag picks the variant
+    # (lets ModelRunner/lakehouse users opt in via EngineConfig alone)
+    if optimized is None:
+        optimized = cfg.fact_optimized
+    if optimized:
+        return fact_patient_encounters_optimized(stg_vitals, stg_claims, stg_ehr, cfg)
+    vitals, claims, ehr = _lookback_scans(stg_vitals, stg_claims, stg_ehr, cfg)
+
+    # --- vitals ⟕ claims band join + proximity rank (:81-115)
+    on, right_key, days_from, rank = _band_join_exprs(
+        cfg, "v", "c", "service_date", ("claim_id",)
+    )
+    vc = (
+        vitals.alias("v")
+        .join(claims.alias("c"), on, "left")
+        .drop(right_key)
+        .withColumnRenamed("provider_id", "claim_provider_id")
+        .withColumn("days_from_service", days_from)
+        .withColumn("claim_proximity_rank", rank)
+    )
+
+    # --- (vitals⋈claims) ⟕ ehr band join + proximity rank (:117-142);
+    # claim_id breaks ties within the claim-duplicated cross product
+    on, right_key, days_from, rank = _band_join_exprs(
+        cfg, "vc", "e", "visit_date", ("record_id", "claim_id")
+    )
+    enc = (
+        vc.alias("vc")
+        .join(ehr.alias("e"), on, "left")
+        .drop(right_key)
+        .withColumnRenamed("provider_id", "ehr_provider_id")
+        .withColumn("days_from_visit", days_from)
+        .withColumn("ehr_proximity_rank", rank)
+    )
+
+    # --- rank-1 CASE projection + wide aggregation (:144-239)
+    group, aggs, projection = _encounter_exprs(cfg)
+    return enc.groupBy(*group).agg(*aggs).select(*projection)
 
 
 def fact_patient_encounters_optimized(

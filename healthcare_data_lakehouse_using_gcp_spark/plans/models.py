@@ -7,7 +7,10 @@ list of Model specs executed against the Spark catalog:
   view  → createOrReplaceTempView (S6)
   table → write.saveAsTable / parquet (S7)
 
-`ref()`/`source()` resolution (J4) = catalog lookups by name.
+`ref()`/`source()` resolution (J4) = catalog lookups by name. The
+builders are fixed plans whose Column expressions are built once per
+EngineConfig (functions/prebuilt.py), so a repeated run pays only the
+DataFrame operations, writes and reads.
 """
 
 from __future__ import annotations

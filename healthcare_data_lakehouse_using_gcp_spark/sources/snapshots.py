@@ -203,8 +203,8 @@ class SnapshotTable:
         self.bloom_hashes = bloom_hashes
         if bloom_bits % 64 != 0 or bloom_bits <= 0:
             raise ValueError("bloom_bits must be a positive multiple of 64")
-        os.makedirs(os.path.join(root, _MANIFEST_DIR), exist_ok=True)
-        os.makedirs(os.path.join(root, _DATA_DIR), exist_ok=True)
+        # no directories until the first commit: a read of a
+        # never-written table raises and leaves nothing behind
 
     # ---------------------------------------------------------- metadata
 
@@ -536,6 +536,7 @@ class SnapshotTable:
         """Optimistic-concurrency manifest publish: compute the
         manifest against the CURRENT latest, attempt an atomic
         create of v(latest+1), retry on collision."""
+        os.makedirs(os.path.join(self.root, _MANIFEST_DIR), exist_ok=True)
         for _ in range(50):
             n = self.latest_version() + 1
             manifest = make_manifest(n)
@@ -1294,7 +1295,11 @@ class SnapshotTable:
         data_root = os.path.join(self.root, _DATA_DIR)
         # os.scandir, not glob: checksum dotfiles must be walked too
         # (ADVICE r7) or commit dirs never empty out
-        commit_dirs = [e.path for e in os.scandir(data_root) if e.is_dir()]
+        commit_dirs = (
+            [e.path for e in os.scandir(data_root) if e.is_dir()]
+            if os.path.isdir(data_root)
+            else []
+        )
         for d in commit_dirs:
             for entry in os.scandir(d):
                 rel = os.path.relpath(entry.path, self.root)

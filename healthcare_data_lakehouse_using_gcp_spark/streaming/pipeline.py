@@ -32,8 +32,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ..config import DEFAULT_CONFIG, EngineConfig
-from ..lakehouse import ENTITY_DATE_COL
-from ..operators.etl import build_etl
+from ..operators.etl import build_etl, with_event_date
 from ..operators.sessions import _epoch_seconds
 from ..sources.readers import read_json_stream
 
@@ -127,11 +126,10 @@ def make_etl_sink(
         batch_df.persist()
         try:
             routed = build_etl(batch_df, cfg)
-            for name, date_col in ENTITY_DATE_COL.items():
+            for name, df in with_event_date(routed).items():
                 table = SnapshotTable(
                     batch_df.sparkSession, os.path.join(warehouse, "processed", name)
                 )
-                df = routed[name].withColumn("event_date", F.to_date(F.col(date_col)))
                 if mode == "upsert":
                     keys = UPSERT_KEYS[name]
                     table.merge_upsert(

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+from types import SimpleNamespace
 
 import pytest
 
@@ -44,3 +45,27 @@ def spark():
 @pytest.fixture(scope="session")
 def cfg():
     return EngineConfig(as_of=AS_OF)
+
+
+@pytest.fixture
+def py4j_calls(monkeypatch):
+    """Counts py4j round trips from Python to the JVM: read ``.n``
+    before and after the code under test. Every round trip of the
+    pinned-thread gateway goes through ClientServerConnection."""
+    from py4j import protocol
+    from py4j.clientserver import ClientServerConnection
+
+    counter = SimpleNamespace(n=0)
+    send = ClientServerConnection.send_command
+    release = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+
+    def counting(self, command, *args, **kwargs):
+        # py4j's finalizer thread releases JavaObjects whenever Python
+        # collects them, earlier garbage included: not a round trip of
+        # the code under test, and its timing varies from run to run
+        if not command.startswith(release):
+            counter.n += 1
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    return counter

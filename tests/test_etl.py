@@ -3,10 +3,14 @@ rows per FIXTURES.md edge-row guidance."""
 
 from __future__ import annotations
 
+import dataclasses
+import datetime as dt
 import json
+import time
 
 import pytest
 
+from healthcare_data_lakehouse_using_gcp_spark.config import EngineConfig
 from healthcare_data_lakehouse_using_gcp_spark.operators import etl
 from healthcare_data_lakehouse_using_gcp_spark.sources.generator import HealthcareDataGenerator
 
@@ -166,3 +170,45 @@ def test_generator_mix_end_to_end(spark, cfg):
     assert counts["unknown"] > 0
     # total routed ≤ total minus malformed
     assert sum(counts.values()) <= 200
+
+
+def test_second_build_etl_reuses_expressions(spark, cfg, py4j_calls):
+    """The transform's Columns are built once per config: a later
+    build_etl on a fresh batch pays only its DataFrame operations'
+    py4j round trips (~150), not the ~3,500 of rebuilding every
+    expression through the Column API."""
+    msgs = [json.dumps(GOOD_VITALS), json.dumps(GOOD_CLAIM), json.dumps(GOOD_EHR)]
+    etl.build_etl(_raw_df(spark, msgs), cfg)
+    raw = _raw_df(spark, msgs)
+    before = py4j_calls.n
+    routed = etl.build_etl(raw, cfg)
+    assert py4j_calls.n - before <= 300
+    assert {name: df.count() for name, df in routed.items()} == {
+        "vitals": 1, "claims": 1, "ehr": 1, "unknown": 0,
+    }
+
+
+def test_prebuilt_expressions_are_per_config(spark, cfg):
+    """Two configs in one session, interleaved so both hit their
+    cached expressions, keep their own frozen "now" and thresholds."""
+    strict = dataclasses.replace(
+        cfg,
+        as_of=cfg.as_of + dt.timedelta(days=1),
+        thresholds=dataclasses.replace(cfg.thresholds, max_heart_rate=150),
+    )
+    msgs = [json.dumps(GOOD_VITALS), json.dumps(dict(GOOD_VITALS, heart_rate=170))]
+    for c, kept in ((cfg, 2), (strict, 1), (cfg, 2), (strict, 1)):
+        rows = etl.build_etl(_raw_df(spark, msgs), c)["vitals"].collect()
+        assert len(rows) == kept
+        assert {r["processed_at"] for r in rows} == {c.as_of}
+
+
+def test_prebuilt_expressions_keep_a_live_clock(spark):
+    """Without as_of, "now" stays current_timestamp(): reusing the
+    built expressions must not freeze the first run's instant."""
+    live = EngineConfig()
+    msgs = [json.dumps(GOOD_VITALS)]
+    first = etl.build_etl(_raw_df(spark, msgs), live)["vitals"].first()["processed_at"]
+    time.sleep(1.1)
+    second = etl.build_etl(_raw_df(spark, msgs), live)["vitals"].first()["processed_at"]
+    assert second > first

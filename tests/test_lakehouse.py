@@ -210,3 +210,21 @@ def test_second_dag_run_reuses_generated_classes(spark, cfg, tmp_path):
 
     compiled_by_run("wh1")
     assert compiled_by_run("wh2") <= 16
+
+
+def test_second_run_models_reuses_expressions(spark, cfg, tmp_path, py4j_calls):
+    """The staging, fact and dim plans' Columns are built once per
+    config: a second run_models pays the DataFrame operations, writes
+    and reads (~500-800 py4j round trips), not the ~6,000 of rebuilding
+    every model's expressions through the Column API."""
+    gen = HealthcareDataGenerator(seed=43, now=cfg.as_of)
+    raw_dir = tmp_path / "raw"
+    raw_dir.mkdir()
+    (raw_dir / "b.json").write_text("\n".join(gen.generate_messages(200)))
+    lh = HealthcareLakehouse(spark, str(tmp_path / "wh"), cfg)
+    lh.run_etl(str(raw_dir))
+    lh.run_models()
+    before = py4j_calls.n
+    out = lh.run_models()
+    assert py4j_calls.n - before <= 1500
+    assert out["fact_patient_encounters"].count() > 0

@@ -411,6 +411,26 @@ def test_empty_table_and_empty_overwrite(spark, table):
     assert [f.name for f in got.schema.fields] == ["id", "v"]
 
 
+def test_never_written_table_creates_no_directories(spark, tmp_path):
+    """Opening or reading a table that was never committed leaves the
+    file system untouched: read_processed on a never-written zone
+    raises ValueError and creates no directory. The metadata calls
+    work on the absent table, and the first commit creates it."""
+    from healthcare_data_lakehouse_using_gcp_spark.lakehouse import HealthcareLakehouse
+
+    wh = tmp_path / "wh"
+    with pytest.raises(ValueError, match="empty table"):
+        HealthcareLakehouse(spark, str(wh)).read_processed("vitals")
+    assert not wh.exists()
+    table = SnapshotTable(spark, str(tmp_path / "tbl"))
+    assert table.versions() == [] and table.latest_version() == 0
+    assert table.tags() == {} and table.history() == []
+    assert table.vacuum(min_age_seconds=0) == []
+    assert not (tmp_path / "tbl").exists()
+    assert table.commit_append(_mk(spark, [(1, "a")])) == 1
+    assert _rows(table.read()) == [(1, "a")]
+
+
 def test_history_and_manifest_shape(spark, table):
     table.commit_append(_mk(spark, [(1, "a"), (2, "b")]), txn_id="t1")
     h = table.history()
