@@ -76,12 +76,6 @@ class EngineConfig:
     # aggregations instead of the literal window-sort plan
     # (plans/fact.fact_patient_encounters_optimized)
     fact_optimized: bool = False
-    # band-join strategy for the optimized fact plan (VERDICT r7
-    # item 5): "auto" runs joins.band_join_auto's one-row profiling
-    # agg and picks plain vs bucketed per run; "plain"/"bucketed"
-    # pin a strategy and skip the profiling job. The literal plan
-    # always uses the byte-faithful plain join (oracle parity).
-    band_dispatch: str = "auto"
     # engine-side dbt-severity gates over the DAG report checks:
     # low-quality-record count in the last hour, and staleness minutes
     # (warn at the DAG's 30-minute limit, error at 8x that)

@@ -95,9 +95,9 @@ class HealthcareLakehouse:
             raise ValueError("processed zones are snapshot tables; snapshot must be True")
         if raw_df is None:
             raw_df = read_json_batch(self.spark, raw_path)
-        # cache=True: the four routes + counts share one parse/enrich
+        # the four routes + counts share one persisted parse/enrich
         # pass instead of recomputing the batch lineage per branch
-        routed, enriched = build_etl_cached(raw_df, self.cfg, cache=True)
+        routed, enriched = build_etl_cached(raw_df, self.cfg)
         try:
             # THIS batch's routed rows, not the re-read table: the
             # reference's Count.Globally metric is run-scoped

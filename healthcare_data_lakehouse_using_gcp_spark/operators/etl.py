@@ -306,36 +306,36 @@ def route_counts(enriched: DataFrame) -> dict[str, int]:
     return counts
 
 
+def _enriched(raw: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """parse → flags → filter → enrich: the frame demux splits.
+    Unknown-type rows pass the quality filter unchanged (no required
+    fields defined for them, no anomaly flags), matching the
+    reference flow where DataPartitioner runs post-filter
+    (healthcare_etl_pipeline.py:277-293)."""
+    flagged = with_validation_flags(parse_envelope(raw, cfg), cfg)
+    return enrich(quality_filter(flagged), cfg)
+
+
 def build_etl(
-    raw: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG, cache: bool = False
+    raw: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG
 ) -> dict[str, DataFrame]:
     """Full pipeline: parse → flags → filter → enrich → demux.
 
-    Works identically on batch and streaming inputs (T4).
-    ``cache=True`` persists the enriched frame so the four demux
-    branches (and any per-branch counts) share one parse/enrich pass
-    instead of recomputing the lineage per consumer — batch callers
-    that touch several routes should use it (streaming callers persist
-    the micro-batch instead).
+    Works identically on batch and streaming inputs (T4). Nothing is
+    persisted: streaming callers persist the micro-batch instead, and
+    batch callers that touch several routes use build_etl_cached.
     """
-    routes, _ = build_etl_cached(raw, cfg, cache=cache)
-    return routes
+    return demux(_enriched(raw, cfg))
 
 
 def build_etl_cached(
-    raw: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG, cache: bool = True
+    raw: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG
 ) -> tuple[dict[str, DataFrame], DataFrame]:
-    """build_etl + the (possibly persisted) enriched frame, so batch
-    callers can unpersist it once their routes are materialized
-    instead of leaking cached blocks across runs in a long session."""
-    parsed = parse_envelope(raw, cfg)
-    flagged = with_validation_flags(parsed, cfg)
-    clean = quality_filter(flagged)
-    enriched = enrich(clean, cfg)
-    if cache:
-        enriched = enriched.persist()
-    # Unknown-type rows pass the quality filter unchanged (no required
-    # fields defined for them, no anomaly flags), matching the
-    # reference flow where DataPartitioner runs post-filter
-    # (healthcare_etl_pipeline.py:277-293).
+    """build_etl over a PERSISTED enriched frame, so the four demux
+    branches (and any per-branch counts) share one parse/enrich pass
+    instead of recomputing the lineage per consumer. Returns the
+    routes and the enriched frame, so the caller can unpersist it
+    once its routes are materialized instead of leaking cached
+    blocks across runs in a long session."""
+    enriched = _enriched(raw, cfg).persist()
     return demux(enriched), enriched

@@ -213,13 +213,8 @@ def fact_patient_encounters(
     stg_claims: DataFrame,
     stg_ehr: DataFrame,
     cfg: EngineConfig = DEFAULT_CONFIG,
-    optimized: bool | None = None,
 ) -> DataFrame:
-    # explicit arg wins; otherwise the config flag picks the variant
-    # (lets ModelRunner/lakehouse users opt in via EngineConfig alone)
-    if optimized is None:
-        optimized = cfg.fact_optimized
-    if optimized:
+    if cfg.fact_optimized:
         return fact_patient_encounters_optimized(stg_vitals, stg_claims, stg_ehr, cfg)
     vitals, claims, ehr = _lookback_scans(stg_vitals, stg_claims, stg_ehr, cfg)
 
@@ -286,26 +281,20 @@ def fact_patient_encounters_optimized(
     tests/test_fact.py.
 
     Band-join strategy (VERDICT r7 item 5): both inner band joins go
-    through the measured dispatch ``cfg.band_dispatch`` — "auto" runs
-    joins.band_join_auto's one-row profiling agg per run and picks
-    plain vs date-bucketed (bucketed wins once rows-per-key ≳ 50 AND
-    date-spread ≳ 6 band widths; this corpus's orders↔lineitem shape
-    is below both bars, so auto picks plain here); "plain"/"bucketed"
-    pin the strategy and skip the profiling job. Inner mode has no
-    left-uniqueness requirement, so either outcome is exact.
+    through joins.band_join_auto, whose one-row profiling agg picks
+    plain vs date-bucketed from the measured shape on every run
+    (bucketed wins once rows-per-key ≳ 50 AND date-spread ≳ 6 band
+    widths). Inner mode has no left-uniqueness requirement, so either
+    outcome is exact.
     """
-    from ..operators.joins import band_join, band_join_auto, band_join_bucketed
+    from ..operators.joins import band_join_auto
 
     def _dispatch_band_join(left: DataFrame, right: DataFrame, rdate: str) -> DataFrame:
-        args = (left, right, ["patient_id"], "measurement_timestamp", rdate)
-        if cfg.band_dispatch == "auto":
-            out, _strategy = band_join_auto(*args, cfg.band_days, how="inner")
-            return out
-        if cfg.band_dispatch == "bucketed":
-            return band_join_bucketed(*args, cfg.band_days, how="inner")
-        if cfg.band_dispatch == "plain":
-            return band_join(*args, cfg.band_days, how="inner")
-        raise ValueError(f"unknown band_dispatch {cfg.band_dispatch!r}")
+        out, _strategy = band_join_auto(
+            left, right, ["patient_id"], "measurement_timestamp", rdate,
+            cfg.band_days, how="inner",
+        )
+        return out
 
     band = cfg.band_days
     vitals, claims, ehr = _lookback_scans(stg_vitals, stg_claims, stg_ehr, cfg)

@@ -55,6 +55,14 @@ Why this holds at 100 TB:
   the classic orphan-GC race: an in-flight commit's files are
   unreferenced until its manifest lands, so production vacuums keep
   a grace window (Iceberg's orphan-file age threshold).
+- **Writes commit in exactly one place.** Append, overwrite, compact,
+  merge, delete and ``rewrite`` all go through ``_commit``: one file
+  group write, one manifest builder, one publish. A rewrite names the
+  files it read; ``_commit`` probes them before writing and verifies
+  them again at publish, and a commit that landed in between sends
+  the rewrite back through the one rebase loop (``_rebasing``) to
+  recompute against the new latest. No writer can drop another's
+  files, not even a merge into a table that was empty when it began.
 
 ``rollback(to_version)`` is non-destructive: it publishes a NEW
 version whose file list equals the target's, so the bad history
@@ -76,7 +84,8 @@ txn-idempotent):
 - **DML**: ``merge_upsert(batch, keys)`` (keyed upsert rewriting only
   stat-overlapping files) and ``delete_where(predicate)``
   (right-to-erasure; stats-proven-clean deletes no-op; vacuum
-  completes hard erasure of history).
+  completes hard erasure of history); ``rewrite(transform)`` replaces
+  the table with a function of its current contents.
 - **Maintenance**: ``compact()`` bin-packs small files;
   ``compact(sort_by=...)`` additionally restores the disjoint
   per-file ranges that make skipping effective.
@@ -105,6 +114,8 @@ from pyspark.sql import types as T
 
 _MANIFEST_DIR = "_snapshots"
 _DATA_DIR = "data"
+# the parent state of a table's first commit
+_NO_PARENT: dict = {"files": [], "file_stats": {}, "file_blooms": {}}
 
 
 def _bloom_canon(value) -> str | None:
@@ -169,9 +180,9 @@ class ConcurrentCommitError(RuntimeError):
     publish attempt, changing the file set the rewrite derived its
     contents from (e.g. a concurrent append added files the rewrite's
     manifest would silently drop — the classic lost update, ADVICE
-    r8). merge_upsert / delete_where / compact / consolidate_join_view
-    catch this internally and rebase (recompute against the new
-    latest); it escapes only after repeated conflicts."""
+    r8). merge_upsert / delete_where / compact / rewrite catch this
+    in _rebasing and rebase (recompute against the new latest); it
+    escapes only after repeated conflicts."""
 
 
 class SnapshotTable:
@@ -506,18 +517,18 @@ class SnapshotTable:
                 pass  # non-empty (checksum dotfiles) or already gone
 
     def _raise_if_files_moved(self, base_files: set[str], op: str) -> None:
-        """Cheap staleness probe BEFORE an expensive rewrite write
-        (ADVICE r9): if the latest manifest's file set already differs
-        from the set this rewrite read, the publish is guaranteed to
-        abort — raise the rebase signal now, before _write_data burns
-        a full data rewrite that would only be orphaned."""
+        """Raise the rebase signal if the latest manifest's file set
+        differs from the set a rewrite read. _commit calls it twice:
+        BEFORE the expensive write (ADVICE r9: a doomed publish would
+        only orphan a full data rewrite) and again at publish, where
+        the manifest would otherwise drop the new files' rows."""
         v = self.latest_version()
         cur = set(self._load(v)["files"]) if v else set()
         if cur != base_files:
             raise ConcurrentCommitError(
-                f"{op} pre-write check: latest v{v} added "
+                f"{op} read files of an older version; latest v{v} added "
                 f"{sorted(cur - base_files)[:3]} / removed "
-                f"{sorted(base_files - cur)[:3]} — rebasing before write"
+                f"{sorted(base_files - cur)[:3]} — rebasing"
             )
 
     @staticmethod
@@ -562,90 +573,65 @@ class SnapshotTable:
         operation: str,
         txn_id: str | None,
         merge_schema: bool = False,
-        expected_files: list[str] | None = None,
+        read: list[str] | None = None,
+        carry: list[str] | None = None,
     ) -> int:
-        """``expected_files`` (rewrite ops only): the file list the
-        caller derived ``df``'s contents FROM. The publish aborts with
-        ConcurrentCommitError if the current latest's file set differs
-        — a concurrent commit added or removed files this rewrite did
-        not account for, and publishing anyway would drop its rows
-        (lost update). Callers catch and rebase."""
+        """The one commit path of every data write: write ``df`` as a
+        fresh file group, then publish the parent's ``carry`` files
+        (None = all of them, i.e. an append) plus the new group as the
+        next version. Carried files keep their stats and blooms; merge
+        and delete keep the table's schema.
+
+        ``read`` (rewrites only; None = blind write) is the file list
+        ``df`` was derived FROM. It is probed before the write and
+        verified again at publish: a concurrent commit that added or
+        removed files would have its rows dropped (lost update), so the
+        commit aborts with ConcurrentCommitError instead and the caller
+        rebases through _rebasing."""
         if txn_id is not None:
             seen = self._txn_version(txn_id)
             if seen is not None:
                 return seen
-        schema_key = self._schema_key(df.schema)
-        if expected_files is not None:
-            # ADVICE r9: probe staleness BEFORE the expensive rewrite
-            # write — a concurrent commit already guarantees the
-            # publish below would abort and orphan this file group
-            self._raise_if_files_moved(set(expected_files), operation)
+        if read is not None:
+            # a concurrent commit already dooms the publish: rebase
+            # before the expensive write instead of orphaning it
+            self._raise_if_files_moved(set(read), operation)
+        schema = df.schema
+        schema_key = self._schema_key(schema)
         files, n_rows, new_stats, new_blooms = self._write_data(df)
 
         def mk(n: int) -> dict:
-            parent = n - 1
-            base_files: list[str] = []
-            base_stats: dict = {}
-            base_blooms: dict = {}
-            if parent >= 1:
-                pm = self._load(parent)
-                # re-check txn on every retry: a same-token racer may
-                # have landed between our check and this attempt
-                if txn_id is not None:
-                    seen_now = self._txn_version(txn_id)
-                    if seen_now is not None:
-                        raise TxnAlreadyCommitted(seen_now)
-                if expected_files is not None:
-                    cur, exp = set(pm["files"]), set(expected_files)
-                    if cur != exp:
-                        raise ConcurrentCommitError(
-                            f"{operation} read files of an older version; "
-                            f"latest v{parent} added "
-                            f"{sorted(cur - exp)[:3]} / removed "
-                            f"{sorted(exp - cur)[:3]} — rebase required"
-                        )
-                if operation == "append":
-                    if pm["schema_key"] != schema_key and pm["files"]:
-                        if not merge_schema:
-                            raise ValueError(
-                                "append schema mismatch: table has "
-                                f"{pm['schema_key']}, batch has {schema_key} "
-                                "(pass merge_schema=True for additive "
-                                "column evolution)"
-                            )
-                        # additive evolution (Iceberg add-column): the
-                        # batch schema must contain EVERY existing
-                        # field at its existing type; old data files
-                        # read NULL for the added columns (parquet is
-                        # schema-on-read). Drops/retypes stay errors —
-                        # they would corrupt, not evolve.
-                        old = dict(map(tuple, pm["schema_key"]))
-                        new = dict(map(tuple, schema_key))
-                        bad = [
-                            (name, typ, new.get(name))
-                            for name, typ in old.items()
-                            if new.get(name) != typ
-                        ]
-                        if bad:
-                            raise ValueError(
-                                "merge_schema only ADDS columns; batch "
-                                f"drops or retypes existing fields: {bad}"
-                            )
-                    base_files = pm["files"]
-                    base_stats = pm.get("file_stats", {})
-                    base_blooms = pm.get("file_blooms", {})
+            pm = self._load(n - 1) if n > 1 else _NO_PARENT
+            # re-check txn on every retry: a same-token racer may
+            # have landed between our check and this attempt
+            seen_now = None if txn_id is None else self._txn_version(txn_id)
+            if seen_now is not None:
+                raise TxnAlreadyCommitted(seen_now)
+            if read is not None:
+                self._raise_if_files_moved(set(read), operation)
+            if operation == "append" and pm["files"]:
+                self._check_append_schema(pm["schema_key"], schema_key, merge_schema)
+            keep = pm["files"] if carry is None else carry
+            stats, blooms = pm.get("file_stats", {}), pm.get("file_blooms", {})
+            table_schema = operation in ("merge", "delete") and n > 1
             return {
                 "version": n,
-                "parent": parent,
+                "parent": n - 1,
                 "operation": operation,
                 "committed_at": time.time(),
                 "txn_id": txn_id,
-                "files": base_files + files,
-                "file_stats": {**base_stats, **new_stats},
-                "file_blooms": {**base_blooms, **new_blooms},
+                "files": keep + files,
+                "file_stats": {
+                    **{f: stats[f] for f in keep if f in stats},
+                    **new_stats,
+                },
+                "file_blooms": {
+                    **{f: blooms[f] for f in keep if f in blooms},
+                    **new_blooms,
+                },
                 "n_rows": n_rows,
-                "schema": df.schema.json(),
-                "schema_key": schema_key,
+                "schema": pm["schema"] if table_schema else schema.json(),
+                "schema_key": pm["schema_key"] if table_schema else schema_key,
             }
 
         try:
@@ -653,11 +639,62 @@ class SnapshotTable:
         except TxnAlreadyCommitted as dup:
             self._discard_file_group(files)
             return dup.version
-        except ConcurrentCommitError:
-            # the group was never published — reclaim it now instead
-            # of leaving an orphaned commit dir for vacuum (ADVICE r9)
+        except (ConcurrentCommitError, ValueError):
+            # never published: reclaim the group now instead of
+            # leaving an orphaned commit dir for vacuum (ADVICE r9)
             self._discard_file_group(files)
             raise
+
+    @staticmethod
+    def _check_append_schema(
+        table_key: list, batch_key: list, merge_schema: bool
+    ) -> None:
+        """Reject an append whose schema differs from the table's,
+        unless ``merge_schema`` and the batch only ADDS columns
+        (Iceberg add-column): every existing field must keep its type,
+        and old data files read NULL for the added columns (parquet is
+        schema-on-read). Drops/retypes stay errors — they would
+        corrupt, not evolve."""
+        if table_key == batch_key:
+            return
+        if not merge_schema:
+            raise ValueError(
+                f"append schema mismatch: table has {table_key}, batch has "
+                f"{batch_key} (pass merge_schema=True for additive column "
+                "evolution)"
+            )
+        new = dict(map(tuple, batch_key))
+        bad = [
+            (name, typ, new.get(name))
+            for name, typ in map(tuple, table_key)
+            if new.get(name) != typ
+        ]
+        if bad:
+            raise ValueError(
+                "merge_schema only ADDS columns; batch drops or retypes "
+                f"existing fields: {bad}"
+            )
+
+    def _rebasing(self, attempt) -> int:
+        """The one rebase loop: run ``attempt()`` (read the latest
+        version, derive the rewrite, ``_commit`` it with ``read=`` the
+        files it read) until it publishes. Each ConcurrentCommitError
+        means a commit landed in between; back off and recompute
+        against the new latest. The error escapes after 8 in a row."""
+        for tries in range(8):
+            try:
+                return attempt()
+            except ConcurrentCommitError as e:
+                last = e
+                self._rebase_backoff(tries)
+        raise last
+
+    def _latest(self, empty: str = "no snapshots") -> dict:
+        """The latest manifest; raises on a table with no commits."""
+        v = self.latest_version()
+        if v == 0:
+            raise ValueError(f"empty table: {empty} at {self.root}")
+        return self._load(v)
 
     def commit_append(
         self, df: DataFrame, txn_id: str | None = None, merge_schema: bool = False
@@ -671,21 +708,27 @@ class SnapshotTable:
         an error."""
         return self._commit(df, "append", txn_id, merge_schema=merge_schema)
 
-    def commit_overwrite(
-        self,
-        df: DataFrame,
-        txn_id: str | None = None,
-        expected_files: list[str] | None = None,
-    ) -> int:
+    def commit_overwrite(self, df: DataFrame, txn_id: str | None = None) -> int:
         """Replace the table's contents with df as a new snapshot;
-        prior versions stay readable until vacuumed. When ``df`` was
-        DERIVED from the table's own current contents (a
-        read-transform-overwrite maintenance rewrite), pass
-        ``expected_files`` = the source version's file list: the
-        publish then fails with ConcurrentCommitError instead of
-        silently dropping rows a concurrent append landed in between
-        (rebase by re-reading and retrying)."""
-        return self._commit(df, "overwrite", txn_id, expected_files=expected_files)
+        prior versions stay readable until vacuumed. A blind write:
+        when ``df`` is DERIVED from the table's own contents, use
+        ``rewrite`` so a concurrent append is not dropped."""
+        return self._commit(df, "overwrite", txn_id, carry=[])
+
+    def rewrite(self, transform) -> int:
+        """Replace the table's contents with ``transform(current)``,
+        where ``current`` is the latest version's rows, as one
+        ``overwrite`` snapshot. A commit landing between the read and
+        the publish rebases (re-read, re-transform) instead of having
+        its rows silently dropped from the overwrite (lost update,
+        ADVICE r8)."""
+
+        def attempt() -> int:
+            m = self._latest()
+            df = transform(self._scan(m, m["files"]))
+            return self._commit(df, "overwrite", None, read=m["files"], carry=[])
+
+        return self._rebasing(attempt)
 
     def merge_upsert(
         self,
@@ -712,133 +755,49 @@ class SnapshotTable:
 
         Concurrency: the publish verifies the latest manifest's file
         set still equals exactly the files this merge read (carried +
-        affected). Any concurrent commit in between — an append whose
-        files would otherwise be silently dropped from the rewrite's
-        manifest (lost update, ADVICE r8), or another rewrite — makes
-        the merge REBASE: recompute pruning and the rewrite against
-        the new latest and retry, raising ConcurrentCommitError only
-        after repeated conflicts."""
-        last: ConcurrentCommitError | None = None
-        for _attempt in range(8):
-            try:
-                return self._merge_once(batch, keys, txn_id)
-            except ConcurrentCommitError as e:
-                last = e
-                self._rebase_backoff(_attempt)
-        raise last
+        affected; none for an empty table). Any concurrent commit in
+        between — an append whose files would otherwise be silently
+        dropped from the rewrite's manifest (lost update, ADVICE r8),
+        or another rewrite — makes the merge REBASE: recompute pruning
+        and the rewrite against the new latest and retry, raising
+        ConcurrentCommitError only after repeated conflicts."""
 
-    def _merge_once(
-        self,
-        batch: DataFrame,
-        keys: list[str],
-        txn_id: str | None,
-    ) -> int:
-        v = self.latest_version()
-        if v == 0:
-            return self._commit(batch, "merge", txn_id)
-        m = self._load(v)
-        stats = m.get("file_stats", {})
-        # batch key envelope: one driver row of 2×|keys| scalars
-        bounds = batch.agg(
-            *[
-                agg_col
-                for k in keys
-                for agg_col in (
-                    F.min(k).alias(f"__lo_{k}"),
-                    F.max(k).alias(f"__hi_{k}"),
-                )
-            ]
-        ).first()
-        affected, carried = [], []
-        for f in m["files"]:
-            fstats = stats.get(f, {})
-            overlap = True
-            for k in keys:
-                lo, hi = bounds[f"__lo_{k}"], bounds[f"__hi_{k}"]
-                rng = fstats.get(k)
-                if rng is None or lo is None:
-                    continue  # no stats / empty batch: conservative
-                flo, fhi = rng
-                try:
-                    if fhi < self._stat_value(lo) or flo > self._stat_value(hi):
-                        overlap = False
-                        break
-                except TypeError:
-                    continue
-            (affected if overlap else carried).append(f)
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
-        if affected:
-            old = self.spark.read.schema(schema).parquet(
-                *[os.path.join(self.root, f) for f in affected]
-            )
-            survivors = old.join(
-                batch.select(*keys).distinct(), keys, "left_anti"
-            )
-            rewritten = survivors.unionByName(batch.select(*old.columns))
-        else:
+        def attempt() -> int:
+            v = self.latest_version()
+            m = self._load(v) if v else _NO_PARENT
+            affected = []
+            if m["files"]:
+                # batch key envelope: one driver row of 2×|keys| scalars
+                row = batch.agg(
+                    *[agg(k) for k in keys for agg in (F.min, F.max)]
+                ).first()
+                stats = m.get("file_stats", {})
+                envelope = [
+                    (k, op, self._stat_value(row[2 * i + j]))
+                    for i, k in enumerate(keys)
+                    for j, op in enumerate((">=", "<="))
+                ]
+                affected = [
+                    f
+                    for f in m["files"]
+                    if all(
+                        self._file_may_match(stats.get(f, {}), *t)
+                        for t in envelope
+                    )
+                ]
             rewritten = batch
-        if txn_id is not None:
-            seen = self._txn_version(txn_id)
-            if seen is not None:
-                return seen
-        # ADVICE r9: cheap staleness probe before the expensive rewrite
-        self._raise_if_files_moved(set(m["files"]), "merge")
-        files, n_rows, new_stats, new_blooms = self._write_data(rewritten)
-
-        def mk(n: int) -> dict:
-            pm = self._load(n - 1)
-            if txn_id is not None:
-                seen_now = self._txn_version(txn_id)
-                if seen_now is not None:
-                    raise TxnAlreadyCommitted(seen_now)
-            # the latest manifest must hold EXACTLY the files this
-            # merge read (carried + affected): a missing file means a
-            # concurrent rewrite replaced rows we are about to
-            # resurrect; an EXTRA file means a concurrent append whose
-            # rows this manifest would silently drop (lost update).
-            # Either way the rewrite is stale — rebase (outer retry).
-            cur = set(pm["files"])
-            base = set(carried) | set(affected)
-            if cur != base:
-                raise ConcurrentCommitError(
-                    "merge read files of an older version; latest "
-                    f"added {sorted(cur - base)[:3]} / removed "
-                    f"{sorted(base - cur)[:3]} — rebasing"
+            if affected:
+                old = self._scan(m, affected)
+                survivors = old.join(
+                    batch.select(*keys).distinct(), keys, "left_anti"
                 )
-            carried_stats = {
-                f: pm.get("file_stats", {}).get(f)
-                for f in carried
-                if pm.get("file_stats", {}).get(f)
-            }
-            carried_blooms = {
-                f: pm.get("file_blooms", {}).get(f)
-                for f in carried
-                if pm.get("file_blooms", {}).get(f)
-            }
-            return {
-                "version": n,
-                "parent": n - 1,
-                "operation": "merge",
-                "committed_at": time.time(),
-                "txn_id": txn_id,
-                "files": carried + files,
-                "file_stats": {**carried_stats, **new_stats},
-                "file_blooms": {**carried_blooms, **new_blooms},
-                "n_rows": n_rows,
-                "schema": m["schema"],
-                "schema_key": m["schema_key"],
-            }
+                rewritten = survivors.unionByName(batch.select(*old.columns))
+            carried = [f for f in m["files"] if f not in affected]
+            return self._commit(
+                rewritten, "merge", txn_id, read=m["files"], carry=carried
+            )
 
-        try:
-            return self._publish(mk)
-        except TxnAlreadyCommitted as dup:
-            self._discard_file_group(files)
-            return dup.version
-        except ConcurrentCommitError:
-            # the group was never published — reclaim it now instead
-            # of leaving an orphaned commit dir for vacuum (ADVICE r9)
-            self._discard_file_group(files)
-            raise
+        return self._rebasing(attempt)
 
     def delete_where(
         self, predicate: tuple[str, str, object], txn_id: str | None = None
@@ -859,93 +818,32 @@ class SnapshotTable:
         publish verifies the latest file set is exactly carried +
         affected; a concurrent commit in between triggers an internal
         recompute-and-retry (never a silent drop of its files)."""
-        last: ConcurrentCommitError | None = None
-        for _attempt in range(8):
-            try:
-                return self._delete_once(predicate, txn_id)
-            except ConcurrentCommitError as e:
-                last = e
-                self._rebase_backoff(_attempt)
-        raise last
 
-    def _delete_once(
-        self, predicate: tuple[str, str, object], txn_id: str | None
-    ) -> int:
-        v = self.latest_version()
-        if v == 0:
-            raise ValueError(f"empty table: nothing to delete at {self.root}")
-        if txn_id is not None:
-            seen = self._txn_version(txn_id)
-            if seen is not None:
-                return seen
-        affected, _total = self.prune_files(v, predicate)
-        if not affected:
-            return v  # stats prove no row matches: no-op
-        m = self._load(v)
-        carried = [f for f in m["files"] if f not in set(affected)]
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
-        col, op, value = predicate
-        sql_op = "=" if op == "==" else op
-        survivors = (
-            self.spark.read.schema(schema)
-            .parquet(*[os.path.join(self.root, f) for f in affected])
-            .filter(~F.expr(f"{col} {sql_op} {json.dumps(value)}"))
-        )
-        self._raise_if_files_moved(set(m["files"]), "delete")
-        files, n_rows, new_stats, new_blooms = self._write_data(survivors)
-
-        def mk(n: int) -> dict:
-            pm = self._load(n - 1)
+        def attempt() -> int:
+            m = self._latest("nothing to delete")
             if txn_id is not None:
-                seen_now = self._txn_version(txn_id)
-                if seen_now is not None:
-                    raise TxnAlreadyCommitted(seen_now)
-            cur = set(pm["files"])
-            base = set(carried) | set(affected)
-            if cur != base:
-                raise ConcurrentCommitError(
-                    "delete read files of an older version; latest "
-                    f"added {sorted(cur - base)[:3]} / removed "
-                    f"{sorted(base - cur)[:3]} — rebasing"
-                )
-            carried_stats = {
-                f: pm.get("file_stats", {}).get(f)
-                for f in carried
-                if pm.get("file_stats", {}).get(f)
-            }
-            carried_blooms = {
-                f: pm.get("file_blooms", {}).get(f)
-                for f in carried
-                if pm.get("file_blooms", {}).get(f)
-            }
-            return {
-                "version": n,
-                "parent": n - 1,
-                "operation": "delete",
-                "committed_at": time.time(),
-                "txn_id": txn_id,
-                "files": carried + files,
-                "file_stats": {**carried_stats, **new_stats},
-                "file_blooms": {**carried_blooms, **new_blooms},
-                "n_rows": n_rows,
-                "schema": m["schema"],
-                "schema_key": m["schema_key"],
-            }
+                seen = self._txn_version(txn_id)
+                if seen is not None:
+                    return seen
+            affected, _total = self.prune_files(m["version"], predicate)
+            if not affected:
+                return m["version"]  # stats prove no row matches: no-op
+            col, op, value = predicate
+            sql_op = "=" if op == "==" else op
+            survivors = self._scan(m, affected).filter(
+                ~F.expr(f"{col} {sql_op} {json.dumps(value)}")
+            )
+            carried = [f for f in m["files"] if f not in affected]
+            return self._commit(
+                survivors, "delete", txn_id, read=m["files"], carry=carried
+            )
 
-        try:
-            return self._publish(mk)
-        except TxnAlreadyCommitted as dup:
-            self._discard_file_group(files)
-            return dup.version
-        except ConcurrentCommitError:
-            # the group was never published — reclaim it now instead
-            # of leaving an orphaned commit dir for vacuum (ADVICE r9)
-            self._discard_file_group(files)
-            raise
+        return self._rebasing(attempt)
 
     def rollback(self, to_version: int) -> int:
         """Publish a NEW snapshot whose contents equal ``to_version``
-        (non-destructive undo; the rolled-back history stays)."""
+        (non-destructive undo; the rolled-back history stays). The
+        one manifest built outside _commit: it writes no data."""
         target = self._load(to_version)
 
         def mk(n: int) -> dict:
@@ -1014,61 +912,35 @@ class SnapshotTable:
         rebase: re-read the new latest and redo the rewrite."""
         if sort_by and zorder_by:
             raise ValueError("pass sort_by or zorder_by, not both")
-        last: ConcurrentCommitError | None = None
-        for _attempt in range(8):
-            try:
-                return self._compact_once(
-                    target_file_bytes,
-                    txn_id,
-                    sort_by,
-                    zorder_by,
-                    zorder_bits,
-                    zorder_quantize,
-                )
-            except ConcurrentCommitError as e:
-                last = e
-                self._rebase_backoff(_attempt)
-        raise last
 
-    def _compact_once(
-        self,
-        target_file_bytes: int,
-        txn_id: str | None,
-        sort_by: list[str] | None,
-        zorder_by: list[str] | None,
-        zorder_bits: int,
-        zorder_quantize: str,
-    ) -> int:
-        from pyspark.sql import functions as _F
-
-        v = self.latest_version()
-        if v == 0:
-            raise ValueError(f"empty table: nothing to compact at {self.root}")
-        m = self._load(v)
-        n_bytes = sum(
-            os.path.getsize(os.path.join(self.root, f)) for f in m["files"]
-        )
-        n_files = max(1, round(n_bytes / float(target_file_bytes)))
-        if sort_by is None and zorder_by is None and len(m["files"]) <= n_files:
-            return v  # already at the target layout: no-op
-        df = self.read(version=v)
-        if sort_by:
-            df = df.repartitionByRange(
-                n_files, *[_F.col(c) for c in sort_by]
-            ).sortWithinPartitions(*sort_by)
-        elif zorder_by:
-            from .layout import zorder_layout
-
-            df = zorder_layout(
-                df,
-                zorder_by,
-                bits=zorder_bits,
-                num_files=n_files,
-                quantize=zorder_quantize,
+        def attempt() -> int:
+            m = self._latest("nothing to compact")
+            n_bytes = sum(
+                os.path.getsize(os.path.join(self.root, f)) for f in m["files"]
             )
-        else:
-            df = df.repartition(n_files)
-        return self._commit(df, "compact", txn_id, expected_files=m["files"])
+            n_files = max(1, round(n_bytes / float(target_file_bytes)))
+            if sort_by is None and zorder_by is None and len(m["files"]) <= n_files:
+                return m["version"]  # already at the target layout: no-op
+            df = self._scan(m, m["files"])
+            if sort_by:
+                df = df.repartitionByRange(
+                    n_files, *[F.col(c) for c in sort_by]
+                ).sortWithinPartitions(*sort_by)
+            elif zorder_by:
+                from .layout import zorder_layout
+
+                df = zorder_layout(
+                    df,
+                    zorder_by,
+                    bits=zorder_bits,
+                    num_files=n_files,
+                    quantize=zorder_quantize,
+                )
+            else:
+                df = df.repartition(n_files)
+            return self._commit(df, "compact", txn_id, read=m["files"], carry=[])
+
+        return self._rebasing(attempt)
 
     # ---------------------------------------------------------- read
 
@@ -1207,19 +1079,22 @@ class SnapshotTable:
             if not eligible:
                 raise ValueError(f"no snapshot committed at or before {as_of}")
             version = eligible[-1]
-        if version is None:
-            version = self.latest_version()
-            if version == 0:
-                raise ValueError(f"empty table: no snapshots at {self.root}")
-        m = self._load(version)
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
+        m = self._latest() if version is None else self._load(version)
         files = m["files"]
         if prune is not None:
-            files, _total = self.prune_files(version, prune)
+            files, _total = self.prune_files(m["version"], prune)
+        return self._scan(m, files)
+
+    def _scan(self, m: dict, files: list[str]) -> DataFrame:
+        """The one file-list scan: ``files`` (root-relative) read under
+        manifest ``m``'s schema; no files reads as an empty frame of
+        that schema."""
+        schema = T.StructType.fromJson(json.loads(m["schema"]))
         if not files:
             return self.spark.createDataFrame([], schema)
-        paths = [os.path.join(self.root, f) for f in files]
-        return self.spark.read.schema(schema).parquet(*paths)
+        return self.spark.read.schema(schema).parquet(
+            *[os.path.join(self.root, f) for f in files]
+        )
 
     def changes_between(self, v_from: int, v_to: int) -> DataFrame:
         """Delta-CDF-style change feed: the rows inserted and deleted
@@ -1247,16 +1122,7 @@ class SnapshotTable:
         to_files = set(m_to["files"])
         added = sorted(to_files - from_files)
         removed = sorted(from_files - to_files)
-        schema = T.StructType.fromJson(json.loads(m_to["schema"]))
-
-        def _scan(rel_files: list[str]) -> DataFrame:
-            if not rel_files:
-                return self.spark.createDataFrame([], schema)
-            return self.spark.read.schema(schema).parquet(
-                *[os.path.join(self.root, f) for f in rel_files]
-            )
-
-        ins, dels = _scan(added), _scan(removed)
+        ins, dels = self._scan(m_to, added), self._scan(m_to, removed)
         if removed and added:
             ins, dels = ins.exceptAll(dels), dels.exceptAll(ins)
         return ins.withColumn("_change_type", F.lit("insert")).unionByName(

@@ -316,28 +316,14 @@ def consolidate_join_view(spark: SparkSession, view_root: str) -> int:
     — the join-view analogue of compact(); read_join_view results are
     identical before and after.
 
-    Concurrency: the rewrite is pinned to one source version and the
-    publish verifies that version is still the latest file set — a
-    streaming delta appended in between rebases (re-read, re-fold)
+    Concurrency: SnapshotTable.rewrite — a streaming delta appended
+    between the read and the publish rebases (re-read, re-fold)
     instead of being silently dropped from the overwrite manifest
     (lost update, ADVICE r8)."""
     from ..operators.incremental import consolidate
-    from ..sources.snapshots import ConcurrentCommitError, SnapshotTable
+    from ..sources.snapshots import SnapshotTable
 
-    st = SnapshotTable(spark, view_root)
-    last: ConcurrentCommitError | None = None
-    for _attempt in range(8):
-        v = st.latest_version()
-        if v == 0:
-            raise ValueError(f"empty table: no snapshots at {view_root}")
-        base = st._load(v)["files"]
-        folded = consolidate(st.read(version=v))
-        try:
-            return st.commit_overwrite(folded, expected_files=base)
-        except ConcurrentCommitError as e:
-            last = e
-            st._rebase_backoff(_attempt)
-    raise last
+    return SnapshotTable(spark, view_root).rewrite(consolidate)
 
 
 def read_sharded_rollup_state(

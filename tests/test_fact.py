@@ -134,11 +134,14 @@ def test_fact_optimized_equivalence(spark, cfg):
     literal plan's on tie-free data; aggregates at vitals grain with
     no cross-product inflation; no Window operator in the plan."""
     import contextlib
+    import dataclasses
     import io
 
     v, c, e = _stg_frames(spark, cfg)
     lit = fact_patient_encounters(v, c, e, cfg)
-    opt = fact_patient_encounters(v, c, e, cfg, optimized=True)
+    opt = fact_patient_encounters(
+        v, c, e, dataclasses.replace(cfg, fact_optimized=True)
+    )
 
     assert opt.count() == 2  # one row per vitals measurement
     o = {r["patient_id"]: r for r in opt.collect()}
@@ -176,27 +179,38 @@ def test_fact_optimized_equivalence(spark, cfg):
     assert "Window" not in buf.getvalue()  # hash-aggs replaced both sorts
 
 
-def test_fact_optimized_same_result_under_every_band_dispatch(spark, cfg):
+def test_fact_optimized_same_result_under_every_band_dispatch(
+    spark, cfg, monkeypatch
+):
     """VERDICT r7 item 5: the optimized fact routes its two inner band
-    joins through the measured dispatch. All three dispatch settings
-    — auto (profiling agg picks), plain, bucketed — must produce the
-    identical fact; inner-mode bucketing has no left-uniqueness
-    requirement, so this holds on any data shape."""
+    joins through band_join_auto, which picks plain or bucketed from
+    the measured shape. Whichever it picks — auto's own choice, or
+    either strategy forced — the fact must be identical; inner-mode
+    bucketing has no left-uniqueness requirement, so this holds on
+    any data shape."""
     import dataclasses
 
+    from healthcare_data_lakehouse_using_gcp_spark.operators import joins
+
     v, c, e = _stg_frames(spark, cfg)
-    outs = {}
-    for mode in ("auto", "plain", "bucketed"):
-        mcfg = dataclasses.replace(cfg, band_dispatch=mode)
-        df = fact_patient_encounters(v, c, e, mcfg, optimized=True)
-        outs[mode] = sorted(
-            map(tuple, df.drop("created_at", "updated_at").collect())
-        )
-    assert outs["auto"] == outs["plain"] == outs["bucketed"]
-    with pytest.raises(ValueError, match="band_dispatch"):
-        fact_patient_encounters(
-            v, c, e, dataclasses.replace(cfg, band_dispatch="bogus"), optimized=True
-        )
+    opt_cfg = dataclasses.replace(cfg, fact_optimized=True)
+
+    def fact_rows():
+        df = fact_patient_encounters(v, c, e, opt_cfg)
+        return sorted(map(tuple, df.drop("created_at", "updated_at").collect()))
+
+    auto = fact_rows()
+    assert auto
+    for join in (joins.band_join, joins.band_join_bucketed):
+        calls = []
+
+        def forced(*a, _join=join, **k):
+            calls.append(_join.__name__)
+            return _join(*a, **k), _join.__name__
+
+        monkeypatch.setattr(joins, "band_join_auto", forced)
+        assert fact_rows() == auto, join.__name__
+        assert len(calls) == 2  # both band joins took the forced strategy
 
 
 def test_band_join_auto_profiles_with_one_job(spark, cfg):
@@ -241,6 +255,6 @@ def test_fact_optimized_via_config_flag(spark, cfg):
     opt_cfg = dataclasses.replace(cfg, fact_optimized=True)
     out = fact_patient_encounters(v, c, e, opt_cfg)
     assert out.count() == 2  # vitals grain: config flag picked the rewrite
-    # explicit arg overrides the config
-    lit = fact_patient_encounters(v, c, e, opt_cfg, optimized=False)
+    # the flag is the only switch: off, the literal plan runs
+    lit = fact_patient_encounters(v, c, e, cfg)
     assert lit.count() == 3  # literal degenerate grouping

@@ -443,6 +443,55 @@ def test_history_and_manifest_shape(spark, table):
         m = json.load(f)
     assert m["files"] and all(f_.startswith("data/") for f_ in m["files"])
 
+    # every operation writes the same manifest keys (rollback adds the
+    # version it restores); time travel and the benchmark's per-commit
+    # file accounting read exactly these
+    for lo in (100, 200):
+        table.commit_append(_mk(spark, [(lo + i, f"v{lo + i}") for i in range(5)]))
+    pre_merge = table._load(table.latest_version())
+    table.merge_upsert(_mk(spark, [(202, "B")]), ["id"])
+    table.delete_where(("id", "==", 201))
+    table.compact(target_file_bytes=1 << 30)
+    table.commit_overwrite(_mk(spark, [(7, "w")]))
+    table.rollback(2)
+    keys = {
+        "version", "parent", "operation", "committed_at", "txn_id", "files",
+        "file_stats", "file_blooms", "n_rows", "schema", "schema_key",
+    }
+    ops = []
+    for v in table.versions():
+        mv = table._load(v)
+        ops.append(mv["operation"])
+        extra = {"rollback_of"} if mv["operation"] == "rollback" else set()
+        assert set(mv) == keys | extra, mv["operation"]
+        assert (mv["version"], mv["parent"]) == (v, v - 1)
+    assert ops == [
+        "append", "append", "append", "merge", "delete", "compact",
+        "overwrite", "rollback",
+    ]
+    assert table._load(8)["rollback_of"] == 2
+    # a merge carries the files it does not touch byte-for-byte,
+    # stats included: the 200-range batch leaves v1's and v2's files
+    merged = table._load(4)
+    untouched = [f for f in pre_merge["files"] if f in merged["files"]]
+    assert untouched and merged["files"][: len(untouched)] == untouched
+    assert {f: merged["file_stats"][f] for f in untouched} == {
+        f: pre_merge["file_stats"][f] for f in untouched
+    }
+    assert merged["schema"] == pre_merge["schema"]
+
+
+def test_merge_on_empty_table_rebases_on_concurrent_first_append(spark, table):
+    """A merge that starts on an empty table read NO files; a first
+    append landing before it publishes must survive, not be dropped
+    from the merge's manifest (lost update)."""
+    victim = SnapshotTable(spark, table.root)
+    _fire_once_before_publish(
+        victim, lambda: table.commit_append(_mk(spark, [(50, "rival")]))
+    )
+    victim.merge_upsert(_mk(spark, [(2, "B2")]), ["id"])
+    assert _rows(table.read()) == [(2, "B2"), (50, "rival")]
+
 
 def test_foreachbatch_exactly_once_sink(spark, tmp_path):
     """A Structured Streaming foreachBatch sink writing with
